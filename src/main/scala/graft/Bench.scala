@@ -45,257 +45,231 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** One timed section: its queries, and the tag its JSON keys carry.
+    * The first section of a run is the headline: its total is the
+    * artifact's `value` and its rows are `queries`; a later section's
+    * are `<tag>_total` and `<tag>_queries`. Every section also stamps
+    * `par_ratio_<tag>` and `steal_pct_<tag>`.
+    */
+  case class Section(tag: String, queries: Seq[QueryDef])
+
+  /** One published row: min seconds over the burst-free runs, the
+    * steal that run carried, and how many runs the row took.
+    */
+  private case class Row(name: String, sec: Double, stealPct: Double,
+      runs: Int)
+
+  /** A timed section: its pre-section all-cores ratio, its rows and
+    * the steal over its timed window.
+    */
+  private case class Timed(section: Section, parRatio: Double,
+      rows: Seq[Row], stealPct: Double)
+
   def main(args: Array[String]): Unit = {
-    import BenchGates._
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
+    run(sfDir, Seq(Section("headline", SparkEntry.headline),
+      // the 100 TB scale families — APSS, stored-index near-dedup,
+      // BPE training, PageRank, DBSCAN, HLL
+      Section("scale", SparkEntry.scaleBench)), "headline_total", outPath)
+  }
+
+  /** The gated measurement every bench main shares: times `sections`
+    * over `sfDir` inside [[BenchGates.retryUntilValid]], prints the
+    * chosen attempt's JSON line (`{"metric":<metric>,...}`), writes it
+    * to `outPath` too, and exits nonzero if any codegen'd stage fell
+    * back to interpreted execution.
+    */
+  def run(sfDir: String, sections: Seq[Section], metric: String,
+      outPath: String): Unit = {
+    import BenchGates._
+    require(new java.io.File(sfDir).isDirectory,
+      s"$sfDir missing — sf1: python3 tools/gen_sf1.py <sf0.1 dir> $sfDir")
     val counter = graft.plans.CodegenWatch.install()
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // one small file per scan split (binaryFile HTML pages fan out
-      // across cores without a repartition shuffle); the SF-scale
-      // parquet tables are below this bound either way
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val json = Sessions.run() { spark =>
+      def runOnce(d: QueryDef): Double = {
+        val t0 = System.nanoTime()
+        try d.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] ${d.name} failed: $e"); return -1.0 }
+        (System.nanoTime() - t0) / 1e9
+      }
 
-    def runOnce(d: QueryDef): Double = {
-      val t0 = System.nanoTime()
-      try d.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // warm-up pass over EVERY query: JIT + codegen + parquet footer
-    // caches, and one-time fixture materialization (q24's synthetic
-    // pages) all land outside the timed region.
-    // min of 3 runs — strips one-off JIT/compile noise and reduces the
-    // ±20% machine-load variance a single sample carries.
-    // PER-ROW steal with burst retries (round 17): the first r17
-    // session artifact shipped valid+in-band while its headline
-    // section ran under a 5.6% steal burst — the exact within-attempt
-    // gap BenchSf1 closed in 71468ce. Same contract here: each row is
-    // min over up to 3 burst-free runs (a run at >= StealGateMaxPct
-    // steal is a load measurement and is discarded; bounded at 5 runs
-    // total), and the published run's steal is stamped per row.
-    def timeSection(targets: Seq[QueryDef])
-        : Seq[(String, Double, Double, Int)] = {
-      targets.foreach(runOnce)
-      targets.map { d =>
-        def timedRun(): (Double, Double) = {
-          val s0 = stealTicks()
-          val t0 = System.nanoTime()
-          val sec = runOnce(d)
-          (sec, stealPct(stealTicks() - s0,
-            (System.nanoTime() - t0) / 1000000L))
-        }
+      // PER-ROW steal with burst retries (round 17): a single-row steal
+      // burst inside an otherwise clean attempt once shipped a row 40%
+      // high with nothing in the artifact to adjudicate it. Each row is
+      // the min over up to 3 burst-free runs (a run at >=
+      // StealGateMaxPct steal is a load measurement and is re-run;
+      // bounded at 5 runs), stamped with the published run's steal.
+      // When every run burst, the min over all ships, honestly stamped.
+      def timeRow(d: QueryDef): Row = {
+        def burstFree(r: (Double, Double)) = r._2 < 0 || r._2 < StealGateMaxPct
         var runs = List.empty[(Double, Double)]
-        var clean = 0
-        while (runs.length < 5 && clean < 3 && !runs.exists(_._1 < 0)) {
-          val r = timedRun()
-          runs ::= r
-          if (r._1 >= 0 && (r._2 < 0 || r._2 < StealGateMaxPct)) clean += 1
-        }
-        if (runs.exists(_._1 < 0)) (d.name, -1.0, -1.0, runs.length)
+        def clean = runs.count(r => r._1 >= 0 && burstFree(r))
+        while (runs.length < 5 && clean < 3 && !runs.exists(_._1 < 0))
+          runs ::= withSteal(runOnce(d))
+        if (runs.exists(_._1 < 0)) Row(d.name, -1.0, -1.0, runs.length)
         else {
-          val pool = runs.filter(r => r._2 < 0 || r._2 < StealGateMaxPct)
+          val pool = runs.filter(burstFree)
           val best = (if (pool.nonEmpty) pool else runs).minBy(_._1)
-          (d.name, best._1, best._2, runs.length)
+          Row(d.name, best._1, best._2, runs.length)
         }
       }
-    }
-    def toJsonObj(results: Seq[(String, Double, Double, Int)]): String =
-      results.map { case (k, v, _, _) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-    def toStealObj(results: Seq[(String, Double, Double, Int)]): String =
-      results.map { case (k, _, s, _) => "\"" + k + "\":" + f"$s%.2f" }
-        .mkString("{", ",", "}")
 
-    // one full gated measurement: idle gate, before-calibrations, the
-    // timed sections, after-calibrations → (artifact JSON, clean).
-    // `clean` = validFinal AND barrier-comparable: the r15 driver
-    // artifact published a contaminated-then-rerun headline as
-    // "valid":true with barrier 1.356 — and the headline rows moved
-    // hardest (q24 3.0× on unchanged code). Publishing after a
-    // contaminated attempt now waits for the barrier probe to re-enter
-    // the band (bounded by SPARK_GRAFT_BENCH_ATTEMPTS).
-    def attempt(attemptNo: Int): (String, Int) = {
-      val gate = waitForIdle()
-      val valid = gate.valid
-      val loadBefore = loadavg()
-      // per-attempt codegen-fallback count (r13 advisor): the watcher is
-      // JVM-cumulative, so a clean retry must not inherit a discarded
-      // contaminated attempt's fallbacks. The process-exit gate below
-      // stays cumulative on purpose.
-      val ceStart = counter.count.get()
-      val attemptT0 = System.nanoTime()
-      val attemptSt0 = stealTicks()
-      val calibMs = cpuCalibMs()
-      val parMs = cpuCalibParMs()
-      // barrier-shaped probe (round 15): the r14 driver artifact shipped
-      // a +22% scale_total swing as "valid":true on UNCHANGED code (q95
-      // 1.59→2.98 s) while the idle sf1 rerun showed the same queries
-      // FASTER — the sf0.1 artifact is the one the driver records every
-      // round, so it needs the same iterative-state comparability flag
-      // BenchSf1 got in round 14 (see barrierCalibMs scaladoc).
-      // Steal sampled across the probe window (round 16): the probe's
-      // elevation is caused by hypervisor steal under parallel load —
-      // stamping the direct signal turns "barrier 1.3, cause unknown"
-      // into "the hypervisor took N% of the box during the probe".
-      val barrierSt0 = stealTicks()
-      val barrierT0 = System.nanoTime()
-      val barrierMs = barrierCalibMs(spark)
-      val barrierStealPct = stealPct(stealTicks() - barrierSt0,
-        (System.nanoTime() - barrierT0) / 1000000L)
-      // per-SECTION steal (round 16): steal is bursty within a clean
-      // attempt — the r16 sf1 artifact carried one row 40% high while
-      // the attempt averaged 1.2% — so each timed section records the
-      // steal it actually ran under, which is the first field to read
-      // when a single section moves across rounds
-      // PRE-SECTION par re-probe (round 18, r17 verdict item 1): the
-      // r17 canonical artifact shipped q24/q30/q34 at 2.4-4.7× under a
-      // ~5-core residual load the startup gate had steal-adjudicated
-      // away — the contender was IN-GUEST (a finished-but-draining sbt
-      // session), invisible to hypervisor steal and measured only once,
-      // minutes before the headline section ran. Each timed section now
-      // re-probes the all-cores ratio immediately before it starts;
-      // a section that began contended is machine-readably so
-      // (par_ratio_headline / par_ratio_scale), contributes to
-      // valid:false, and de-couples headline_comparable from
-      // iterative_comparable (they were the same variable before —
-      // What's wrong #6 of the r17 verdict).
-      def parNow(): Double = {
-        val single = cpuCalibMs()
-        cpuCalibParMs().toDouble / single.toDouble
-      }
-      val parRatioHeadline = parNow()
-      val headSt0 = stealTicks()
-      val headT0 = System.nanoTime()
-      val results = timeSection(SparkEntry.headline)
-      val headStealPct = stealPct(stealTicks() - headSt0,
-        (System.nanoTime() - headT0) / 1000000L)
-      val qs = toJsonObj(results)
-      val total = results.map(_._2).filter(_ >= 0).sum
-      // second section (round 9): the 100 TB scale families — APSS,
-      // stored-index near-dedup, BPE training, PageRank, DBSCAN, HLL —
-      // previously invisible to the per-round artifact
-      val parRatioScale = parNow() // pre-section re-probe, see above
-      val scaleSt0 = stealTicks()
-      val scaleT0 = System.nanoTime()
-      val scaleResults = timeSection(SparkEntry.scaleBench)
-      val scaleStealPct = stealPct(stealTicks() - scaleSt0,
-        (System.nanoTime() - scaleT0) / 1000000L)
-      val scaleQs = toJsonObj(scaleResults)
-      val scaleTotal = scaleResults.map(_._2).filter(_ >= 0).sum
-      // calib-normalized value: seconds this run WOULD have taken on the
-      // round-8 reference host (cpu_calib_ms = 284 on the r8 recorded
-      // artifact). Cross-round comparison becomes a field read instead of
-      // reader arithmetic: compare value_per_calib to value_per_calib.
-      val refCalibMs = 284.0
-      val calibRatio = calibMs.toDouble / refCalibMs
-      val valuePerCalib = total / calibRatio
-      val scalePerCalib = scaleTotal / calibRatio
-      val compileExceptions = counter.count.get() - ceStart
-      // mid-run contamination check (round 11): the r10 driver artifact
-      // passed the STARTUP load gate yet recorded on a contended host
-      // (calib 339 vs 284) and misled trend readers. Re-spin the
-      // calibration AFTER the run; >15% drift means the host changed
-      // speed mid-bench and the numbers are a load measurement.
-      val calibAfterMs = cpuCalibMs()
-      val parAfterMs = cpuCalibParMs()
-      val barrierAfterMs = barrierCalibMs(spark)
-      val calibDrift =
-        math.abs(calibAfterMs - calibMs).toDouble / calibMs.toDouble
-      // the ALL-CORES probe (round 12): the single-thread spin and the
-      // loadavg gate both passed on the contaminated r10/r11 driver
-      // artifacts — a contender leaves one core free. The parallel/
-      // single ratio, before and after, is what actually sees it.
-      val parRatio = parMs.toDouble / calibMs.toDouble
-      val parRatioAfter = parAfterMs.toDouble / calibAfterMs.toDouble
-      // pre-section probes count toward validity (round 18): a section
-      // that started under in-guest contention is a load measurement
-      // even when the attempt's endpoint probes read clean
-      val parClean = parRatio <= ParRatioMax && parRatioAfter <= ParRatioMax &&
-        parRatioHeadline <= ParRatioMax && parRatioScale <= ParRatioMax
-      val validFinal = valid && calibDrift <= 0.15 && parClean
-      // barrier-state comparability (round 15, widened round 16): NOT
-      // folded into `valid` — an elevated barrier state means cross-day
-      // deltas are host noise, while the measurement itself is still
-      // internally clean. Round 15 proved the probe predicts HEADLINE
-      // movement too, not just the iterative scale rows (the driver's
-      // barrier-1.356 artifact carried q24 at 3.0× and q03 at 1.35× on
-      // unchanged code), so the stamp now covers both sections:
-      // `headline_comparable` and `iterative_comparable` read the same
-      // probe — a reader cannot mistake host state for regression on
-      // ANY published number. Pre-run reading only (the post-bench JVM
-      // carries GC/cached-block state that reads slow without being
-      // host state); the after value is information.
-      val barrierRatio = barrierMs.toDouble / RefBarrierMs
-      val iterComparable = math.abs(barrierRatio - 1.0) <= 0.15
-      // barrier_state (round 17, from the A/B): the anchor breathes
-      // ±25% at near-zero steal, so out-of-band has a DIRECTION a
-      // reader needs — "slow" (elevation that fakes regressions) vs
-      // "fast" (a quick host window that fakes improvements). A fast
-      // window at verified-clean steal is still a valid measurement;
-      // value_per_barrier below normalizes it onto the anchor host.
-      val barrierState =
-        if (iterComparable) "band"
-        else if (barrierRatio < 1.0) "fast" else "slow"
-      // per-section comparability (round 18): each section's flag now
-      // reads ITS OWN pre-section par probe on top of the shared
-      // barrier probe — the fields used to print the same variable
-      // (r17 verdict What's wrong #6) while the r17 contamination was
-      // section-local.
-      val headComparable = iterComparable && parRatioHeadline <= ParRatioMax
-      val scaleComparable = iterComparable && parRatioScale <= ParRatioMax
-      val fastHostClean = validFinal && barrierState == "fast" &&
-        barrierStealPct >= 0 && barrierStealPct < StealGateMaxPct
-      if (parRatioHeadline > ParRatioMax || parRatioScale > ParRatioMax)
-        System.err.println(
-          f"[bench] WARN: pre-section all-cores ratio headline=" +
-            f"$parRatioHeadline%.2f scale=$parRatioScale%.2f exceeds " +
-            f"$ParRatioMax%.2f — that section started contended; " +
+      // one full gated measurement: idle gate, before-calibrations, the
+      // timed sections, after-calibrations → (artifact JSON, rank).
+      def attempt(attemptNo: Int): (String, Int) = {
+        val gate = waitForIdle()
+        val loadBefore = loadavg()
+        // per-attempt codegen-fallback count: the watcher is
+        // JVM-cumulative, so a clean retry must not inherit a discarded
+        // attempt's fallbacks (the process-exit gate stays cumulative)
+        val ceStart = counter.count.get()
+        val attemptT0 = System.nanoTime()
+        val attemptSt0 = stealTicks()
+        val calibMs = cpuCalibMs()
+        val parMs = cpuCalibParMs()
+        // barrier-shaped probe (see barrierCalibMs), with the steal it
+        // ran under: "the hypervisor took N% of the box during the
+        // probe" adjudicates an out-of-band reading directly
+        val (barrierMs, barrierStealPct) = withSteal(barrierCalibMs(spark))
+        // per section: warm-up pass (JIT, codegen, parquet footers,
+        // one-time fixtures land outside the timed region), then the
+        // all-cores ratio re-probed immediately before the timed rows
+        // (round 18: an in-guest contender invisible to steal once
+        // started a section contended minutes after the startup gate
+        // cleared), then the rows inside their own steal window
+        val timed = sections.map { s =>
+          s.queries.foreach(runOnce)
+          val par = parRatioNow()
+          val (rows, steal) = withSteal(s.queries.map(timeRow))
+          Timed(s, par, rows, steal)
+        }
+        val compileExceptions = counter.count.get() - ceStart
+        // mid-run contamination checks: >15% single-thread drift means
+        // the host changed speed mid-bench (round 11); the all-cores
+        // parallel/single ratio, before and after, sees a contender that
+        // leaves one core free (round 12)
+        val calibAfterMs = cpuCalibMs()
+        val parAfterMs = cpuCalibParMs()
+        val barrierAfterMs = barrierCalibMs(spark)
+        val calibDrift =
+          math.abs(calibAfterMs - calibMs).toDouble / calibMs.toDouble
+        val parRatio = parMs.toDouble / calibMs.toDouble
+        val parRatioAfter = parAfterMs.toDouble / calibAfterMs.toDouble
+        // a section that started contended is a load measurement even
+        // when the attempt's endpoint probes read clean
+        val sectionsClean = timed.forall(_.parRatio <= ParRatioMax)
+        val parClean = parRatio <= ParRatioMax &&
+          parRatioAfter <= ParRatioMax && sectionsClean
+        val validFinal = gate.valid && calibDrift <= 0.15 && parClean
+        // barrier-state comparability, NOT folded into `valid`: an
+        // elevated barrier means cross-day deltas are host noise while
+        // the measurement is still internally clean. Pre-run reading
+        // only (the post-bench JVM carries GC/cached-block state that
+        // reads slow without being host state); the after value is
+        // information. The anchor breathes ±25% at near-zero steal, so
+        // out-of-band has a direction: "slow" fakes regressions, "fast"
+        // fakes improvements (value_per_barrier normalizes either).
+        val barrierRatio = barrierMs.toDouble / RefBarrierMs
+        val iterComparable = math.abs(barrierRatio - 1.0) <= 0.15
+        val barrierState =
+          if (iterComparable) "band"
+          else if (barrierRatio < 1.0) "fast" else "slow"
+        val fastHostClean = validFinal && barrierState == "fast" &&
+          barrierStealPct >= 0 && barrierStealPct < StealGateMaxPct
+        if (!sectionsClean) System.err.println(
+          "[bench] WARN: pre-section all-cores ratio " +
+            timed.map(t => f"${t.section.tag}=${t.parRatio}%.2f").mkString(" ") +
+            f" exceeds $ParRatioMax%.2f — a section started contended; " +
             "artifact carries \"valid\":false")
-      if (!iterComparable) System.err.println(
-        f"[bench] NOTE: barrier calibration $barrierMs/$barrierAfterMs ms " +
-          f"vs idle reference ${RefBarrierMs}%.0f ms ($barrierState host) — " +
-          "headline AND scale_queries trend deltas are not cross-day " +
-          "comparable this run except via value_per_barrier")
-      if (!parClean) System.err.println(
-        f"[bench] WARN: all-cores calibration ratio $parRatio%.2f/" +
-          f"$parRatioAfter%.2f exceeds $ParRatioMax%.2f — another " +
-          "multi-core job is stealing cores; artifact carries \"valid\":false")
-      else if (!validFinal && valid) System.err.println(
-        f"[bench] WARN: calibration drifted $calibDrift%.2f mid-run " +
-          s"($calibMs -> $calibAfterMs ms) — artifact carries \"valid\":false")
-      val attemptStealPct = stealPct(stealTicks() - attemptSt0,
-        (System.nanoTime() - attemptT0) / 1000000L)
-      val json =
-        f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec","valid":$validFinal,"queries":$qs,"queries_steal_pct":${toStealObj(results)},"scale_total":$scaleTotal%.3f,"scale_queries":$scaleQs,"scale_queries_steal_pct":${toStealObj(scaleResults)},"value_per_calib":$valuePerCalib%.3f,"scale_total_per_calib":$scalePerCalib%.3f,"ref_calib_ms":284,"sf":"$sfDir","loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}","load_gate":"${gate.loadGate}","steal_pct_gate":${gate.gateStealPct}%.2f,"loadavg_gate_residual":${gate.residualLoad}%.2f,"cpu_calib_ms":$calibMs,"cpu_calib_after_ms":$calibAfterMs,"cpu_calib_par_ms":$parMs,"cpu_calib_par_after_ms":$parAfterMs,"par_ratio":$parRatio%.3f,"par_ratio_after":$parRatioAfter%.3f,"par_ratio_headline":$parRatioHeadline%.3f,"par_ratio_scale":$parRatioScale%.3f,"par_ratio_max":$ParRatioMax%.2f,"barrier_calib_ms":$barrierMs,"barrier_calib_after_ms":$barrierAfterMs,"ref_barrier_ms":${RefBarrierMs}%.0f,"barrier_ratio":$barrierRatio%.3f,"steal_pct_barrier":$barrierStealPct%.2f,"steal_pct_headline":$headStealPct%.2f,"steal_pct_scale":$scaleStealPct%.2f,"steal_pct_attempt":$attemptStealPct%.2f,"headline_comparable":$headComparable,"iterative_comparable":$scaleComparable,"barrier_state":"$barrierState","value_per_barrier":${total / barrierRatio}%.3f,"scale_total_per_barrier":${scaleTotal / barrierRatio}%.3f,"attempt":$attemptNo,"compile_exceptions":$compileExceptions}"""
-      (json,
-        if (validFinal && iterComparable) RankClean
-        else if (fastHostClean) RankFastHost
-        else RankDirty)
-    }
+        if (!iterComparable) System.err.println(
+          f"[bench] NOTE: barrier calibration $barrierMs/$barrierAfterMs ms " +
+            f"vs idle reference ${RefBarrierMs}%.0f ms ($barrierState host) — " +
+            "trend deltas are not cross-day comparable this run except " +
+            "via value_per_barrier")
+        if (!parClean) System.err.println(
+          f"[bench] WARN: all-cores calibration ratio $parRatio%.2f/" +
+            f"$parRatioAfter%.2f exceeds $ParRatioMax%.2f — another " +
+            "multi-core job is stealing cores; artifact carries \"valid\":false")
+        else if (!validFinal && gate.valid) System.err.println(
+          f"[bench] WARN: calibration drifted $calibDrift%.2f mid-run " +
+            s"($calibMs -> $calibAfterMs ms) — artifact carries \"valid\":false")
+        val attemptStealPct = stealPct(stealTicks() - attemptSt0,
+          (System.nanoTime() - attemptT0) / 1000000L)
 
-    val json = retryUntilValid("bench")(attempt)
+        // calib-normalized totals: seconds this run WOULD have taken on
+        // the round-8 reference host (cpu_calib_ms = 284), so
+        // cross-round comparison is a field read
+        val refCalibMs = 284.0
+        def obj(rows: Seq[Row], f: Row => String): String =
+          rows.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
+        def str(v: String): String = "\"" + v + "\""
+        def f3(v: Double): String = f"$v%.3f"
+        def f2(v: Double): String = f"$v%.2f"
+        val sectionFields = timed.zipWithIndex.flatMap {
+          case (Timed(s, par, rows, steal), i) =>
+            val (total, queries) =
+              if (i == 0) ("value", "queries")
+              else (s"${s.tag}_total", s"${s.tag}_queries")
+            val sum = rows.map(_.sec).filter(_ >= 0).sum
+            Seq(total -> f3(sum),
+              queries -> obj(rows, r => f3(r.sec)),
+              s"${queries}_steal_pct" -> obj(rows, r => f2(r.stealPct)),
+              s"${queries}_runs" -> obj(rows, _.runs.toString),
+              s"${total}_per_calib" -> f3(sum / (calibMs / refCalibMs)),
+              s"${total}_per_barrier" -> f3(sum / barrierRatio),
+              s"par_ratio_${s.tag}" -> f3(par),
+              s"steal_pct_${s.tag}" -> f2(steal))
+        }
+        val fields = Seq("metric" -> str(metric)) ++ sectionFields ++ Seq(
+          "unit" -> str("sec"),
+          "valid" -> validFinal.toString,
+          "ref_calib_ms" -> "284",
+          "sf" -> str(sfDir),
+          "loadavg_before" -> str(loadBefore),
+          "loadavg_after" -> str(loadavg()),
+          "load_gate" -> str(gate.loadGate),
+          "steal_pct_gate" -> f2(gate.gateStealPct),
+          "loadavg_gate_residual" -> f2(gate.residualLoad),
+          "cpu_calib_ms" -> calibMs.toString,
+          "cpu_calib_after_ms" -> calibAfterMs.toString,
+          "cpu_calib_par_ms" -> parMs.toString,
+          "cpu_calib_par_after_ms" -> parAfterMs.toString,
+          "par_ratio" -> f3(parRatio),
+          "par_ratio_after" -> f3(parRatioAfter),
+          "par_ratio_max" -> f2(ParRatioMax),
+          "barrier_calib_ms" -> barrierMs.toString,
+          "barrier_calib_after_ms" -> barrierAfterMs.toString,
+          "ref_barrier_ms" -> f"$RefBarrierMs%.0f",
+          "barrier_ratio" -> f3(barrierRatio),
+          "steal_pct_barrier" -> f2(barrierStealPct),
+          "steal_pct_attempt" -> f2(attemptStealPct),
+          // each section's flag reads its own pre-section par probe on
+          // top of the shared barrier probe: the headline flag the
+          // first section's, the iterative flag the last section's
+          "headline_comparable" ->
+            (iterComparable && timed.head.parRatio <= ParRatioMax).toString,
+          "iterative_comparable" ->
+            (iterComparable && timed.last.parRatio <= ParRatioMax).toString,
+          "barrier_state" -> str(barrierState),
+          "attempt" -> attemptNo.toString,
+          "compile_exceptions" -> compileExceptions.toString)
+        (fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}"),
+          if (validFinal && iterComparable) RankClean
+          else if (fastHostClean) RankFastHost
+          else RankDirty)
+      }
+
+      retryUntilValid("bench")(attempt)
+    }
     println(json)
     // the printed line is the source of truth; an unwritable out path
     // must not turn a successful run into a nonzero exit
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] WARN: could not write $outPath: $e")
-    }
-    spark.stop()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] WARN: could not write $outPath: $e") }
     val compileExceptions = counter.count.get()
     if (compileExceptions > 0) {
       System.err.println(s"[bench] FAILING: $compileExceptions CompileException(s) logged — a codegen'd stage fell back to interpreted execution")
@@ -314,27 +288,12 @@ object Bench {
   * line: {"barrier_ms":…,"calib_ms":…,"par_ratio":…,"loadavg":"…"}.
   */
 object BarrierAnchor {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Sessions.run() { spark =>
     import BenchGates._
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-barrier-anchor")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val calib = cpuCalibMs()
     val par = cpuCalibParMs()
-    val st0 = stealTicks()
-    val t0 = System.nanoTime()
-    val barrier = barrierCalibMs(spark)
-    val stl = stealPct(stealTicks() - st0, (System.nanoTime() - t0) / 1000000L)
+    val (barrier, stl) = withSteal(barrierCalibMs(spark))
     println(f"""{"barrier_ms":$barrier,"calib_ms":$calib,"par_ratio":${par.toDouble / calib}%.3f,"steal_pct_barrier":$stl%.2f,"ref_barrier_ms":${RefBarrierMs}%.0f,"loadavg":"${loadavg()}"}""")
-    spark.stop()
   }
 }
 
@@ -469,6 +428,12 @@ object BenchGates {
     Seq.fill(2)(wall()).min
   }
 
+  /** The all-cores/single-thread calibration ratio right now. */
+  def parRatioNow(): Double = {
+    val single = cpuCalibMs()
+    cpuCalibParMs().toDouble / single.toDouble
+  }
+
   /** Threads for the all-cores probe. Default availableProcessors —
     * correct on the reference host (32 physical-thread local[32] box).
     * On an SMT host availableProcessors counts hyperthreads, so 2×
@@ -599,6 +564,14 @@ object BenchGates {
     else 100.0 * ticksDelta * 10.0 /
       (elapsedMs.toDouble * Runtime.getRuntime.availableProcessors())
 
+  /** `body`'s result and the steal % over the window it ran in. */
+  def withSteal[A](body: => A): (A, Double) = {
+    val s0 = stealTicks()
+    val t0 = System.nanoTime()
+    val a = body
+    (a, stealPct(stealTicks() - s0, (System.nanoTime() - t0) / 1000000L))
+  }
+
   /** The idle gate's verdict plus the evidence it decided on, so the
     * artifact can distinguish a genuinely idle start from an
     * adjudicated one (round 17, advisor: the loadavg demotion needs
@@ -698,11 +671,7 @@ object BenchGates {
     // parallel/single spin ratio directly before letting a timed run
     // start, so transient contention burns a sleep here instead of a
     // whole contaminated measurement.
-    def parNow(): Double = {
-      val single = cpuCalibMs()
-      cpuCalibParMs().toDouble / single.toDouble
-    }
-    var ratio = parNow()
+    var ratio = parRatioNow()
     var parWaits = 0
     while (ratio > ParRatioMax && parWaits < 10) {
       parWaits += 1
@@ -710,7 +679,7 @@ object BenchGates {
         f"[bench] all-cores ratio $ratio%.2f > $ParRatioMax%.2f — " +
           s"sleeping 30 s (retry $parWaits/10)")
       Thread.sleep(30000L)
-      ratio = parNow()
+      ratio = parRatioNow()
     }
     // steal-gated pre-wait (round 17): sample hypervisor steal under a
     // sustained ~5 s all-cores load and wait for a clean window. This
@@ -740,7 +709,7 @@ object BenchGates {
     // evidence; the recovery is stamped, not silent.
     var parRecovered = false
     if (ratio > ParRatioMax && stl >= 0 && stl < StealGateMaxPct) {
-      val fresh = parNow()
+      val fresh = parRatioNow()
       if (fresh <= ParRatioMax) {
         System.err.println(
           f"[bench] par ratio recovered after the steal wait " +
@@ -803,9 +772,8 @@ object BenchGates {
   }
 }
 
-/** sf1 (100× grading scale) timed bench of the scale families, with the
-  * SAME trust gates as [[Bench]] — idle gate, warm-up + min-of-3, CPU
-  * calibration, codegen-fallback hard failure. The round-9 "scale
+/** sf1 (100× grading scale) timed bench of the scale families, run by
+  * [[Bench.run]] as one section with all of its gates. The round-9 "scale
   * smoke" proved partition-invariance at sf1 but was single-run and
   * ungated, so a scaling REGRESSION at 100× stayed half-invisible; this
   * main makes sf1 latency a first-class per-round artifact
@@ -813,167 +781,15 @@ object BenchGates {
   *
   * Input: SPARK_GRAFT_SF1_DIR (default /tmp/graft_sf1), generated by
   * `python3 tools/gen_sf1.py` from sf0.1. Output JSON:
-  * `{"metric":"sf1_total", ...}` with the Bench field set.
+  * `{"metric":"sf1_total", ...}` with the Bench field set; the one
+  * section's per-section stamps are `par_ratio_queries` and
+  * `steal_pct_queries`.
   */
 object BenchSf1 {
-
   def main(args: Array[String]): Unit = {
-    import BenchGates._
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_SF1.json")
-    require(new java.io.File(sfDir).isDirectory,
-      s"$sfDir missing — run: python3 tools/gen_sf1.py /root/testdata/sf0.1 $sfDir")
-    val counter = graft.plans.CodegenWatch.install()
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-bench-sf1")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def runOnce(d: QueryDef): Double = {
-      val t0 = System.nanoTime()
-      try d.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench-sf1] ${d.name} failed: $e"); return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val targets = SparkEntry.scaleBenchSf1
-
-    def attempt(attemptNo: Int): (String, Int) = {
-      val gate = waitForIdle()
-      val valid = gate.valid
-      val loadBefore = loadavg()
-      val ceStart = counter.count.get() // per-attempt delta, see Bench
-      val attemptT0 = System.nanoTime()
-      val attemptSt0 = stealTicks()
-      val calibMs = cpuCalibMs()
-      val parMs = cpuCalibParMs()
-      val barrierSt0 = stealTicks()
-      val barrierT0 = System.nanoTime()
-      val barrierMs = barrierCalibMs(spark)
-      val barrierStealPct = stealPct(stealTicks() - barrierSt0,
-        (System.nanoTime() - barrierT0) / 1000000L)
-      targets.foreach(runOnce) // warm-up
-      // per-section steal, mirroring Bench (round 16): the timed loop's
-      // own steal window, separate from the warm-up and the probes
-      val secSt0 = stealTicks()
-      val secT0 = System.nanoTime()
-      // PER-ROW steal with burst retries (round 17, r16 verdict task 3):
-      // the r16 sf1 artifact carried q34 at 13.21 s inside a VALID,
-      // comparable attempt while a verified-0.1%-steal re-time read
-      // 9.47 — a single-row burst averaged into the published row with
-      // nothing in the artifact to adjudicate it. Each row now runs
-      // min-over-3 where every run carries its own steal sample; runs
-      // at >= StealGateMaxPct steal are discarded and re-run (bounded:
-      // 5 runs total), and the artifact stamps the published (min)
-      // run's steal per row plus how many runs were burst-discarded —
-      // a future single-row jump is adjudicable from the artifact
-      // alone.
-      val results = targets.map { d =>
-        def timedRun(): (Double, Double) = {
-          val s0 = stealTicks()
-          val t0 = System.nanoTime()
-          val sec = runOnce(d)
-          (sec, stealPct(stealTicks() - s0,
-            (System.nanoTime() - t0) / 1000000L))
-        }
-        var runs = List.empty[(Double, Double)]
-        var clean = 0
-        while (runs.length < 5 && clean < 3 && !runs.exists(_._1 < 0)) {
-          val r = timedRun()
-          runs ::= r
-          if (r._1 >= 0 && (r._2 < 0 || r._2 < StealGateMaxPct)) clean += 1
-        }
-        if (runs.exists(_._1 < 0)) (d.name, -1.0, -1.0, runs.length)
-        else {
-          // min over the burst-free runs when any exist (the burst
-          // runs are load measurements); else min over all, honestly
-          // stamped with its elevated steal
-          val pool = runs.filter(r => r._2 < 0 || r._2 < StealGateMaxPct)
-          val best = (if (pool.nonEmpty) pool else runs).minBy(_._1)
-          (d.name, best._1, best._2, runs.length)
-        }
-      }
-      val secStealPct = stealPct(stealTicks() - secSt0,
-        (System.nanoTime() - secT0) / 1000000L)
-      val qs = results.map { case (k, v, _, _) =>
-        "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-      val qSteal = results.map { case (k, _, s, _) =>
-        "\"" + k + "\":" + f"$s%.2f" }.mkString("{", ",", "}")
-      val qRuns = results.map { case (k, _, _, n) =>
-        "\"" + k + "\":" + n }.mkString("{", ",", "}")
-      val total = results.map(_._2).filter(_ >= 0).sum
-      val refCalibMs = 284.0
-      val valuePerCalib = total / (calibMs.toDouble / refCalibMs)
-      val compileExceptions = counter.count.get() - ceStart
-      // same mid-run contamination checks as Bench (single-thread drift,
-      // round 11; all-cores parallel ratio, round 12)
-      val calibAfterMs = cpuCalibMs()
-      val parAfterMs = cpuCalibParMs()
-      val barrierAfterMs = barrierCalibMs(spark)
-      val calibDrift =
-        math.abs(calibAfterMs - calibMs).toDouble / calibMs.toDouble
-      val parRatio = parMs.toDouble / calibMs.toDouble
-      val parRatioAfter = parAfterMs.toDouble / calibAfterMs.toDouble
-      val parClean = parRatio <= ParRatioMax && parRatioAfter <= ParRatioMax
-      val validFinal = valid && calibDrift <= 0.15 && parClean
-      // barrier-state comparability flag (round 14): not folded into
-      // `valid` — the measurement is still internally clean — but when
-      // the barrier probe sits >15% off its idle reference, cross-day
-      // trend deltas on iterative-barrier rows are noise and the
-      // artifact says so machine-readably (see barrierCalibMs scaladoc).
-      // Gated on the PRE-RUN reading only: the post-bench JVM carries
-      // cached-block and GC state that reads slow without being host
-      // state (measured: after-probe +50% in an otherwise-clean run);
-      // the after value is recorded as information, not a gate.
-      val barrierRatio = barrierMs.toDouble / RefBarrierMs
-      val iterComparable = math.abs(barrierRatio - 1.0) <= 0.15
-      // barrier_state + fast-host rank: same round-17 semantics as
-      // Bench (see the attempt() there and BenchGates.RankFastHost)
-      val barrierState =
-        if (iterComparable) "band"
-        else if (barrierRatio < 1.0) "fast" else "slow"
-      val fastHostClean = validFinal && barrierState == "fast" &&
-        barrierStealPct >= 0 && barrierStealPct < StealGateMaxPct
-      if (!iterComparable) System.err.println(
-        f"[bench-sf1] NOTE: barrier calibration $barrierMs/$barrierAfterMs ms " +
-          f"vs idle reference ${RefBarrierMs}%.0f ms ($barrierState host) — " +
-          "iterative-barrier rows (q93/q207-shaped) are not cross-day " +
-          "comparable this run except via value_per_barrier")
-      if (!parClean) System.err.println(
-        f"[bench-sf1] WARN: all-cores calibration ratio $parRatio%.2f/" +
-          f"$parRatioAfter%.2f exceeds $ParRatioMax%.2f — artifact " +
-          "carries \"valid\":false")
-      else if (!validFinal && valid) System.err.println(
-        f"[bench-sf1] WARN: calibration drifted $calibDrift%.2f mid-run " +
-          s"($calibMs -> $calibAfterMs ms) — artifact carries \"valid\":false")
-      val attemptStealPct = stealPct(stealTicks() - attemptSt0,
-        (System.nanoTime() - attemptT0) / 1000000L)
-      val json =
-        f"""{"metric":"sf1_total","value":$total%.3f,"unit":"sec","valid":$validFinal,"queries":$qs,"queries_steal_pct":$qSteal,"queries_runs":$qRuns,"value_per_calib":$valuePerCalib%.3f,"ref_calib_ms":284,"sf":"$sfDir","loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}","load_gate":"${gate.loadGate}","steal_pct_gate":${gate.gateStealPct}%.2f,"loadavg_gate_residual":${gate.residualLoad}%.2f,"cpu_calib_ms":$calibMs,"cpu_calib_after_ms":$calibAfterMs,"cpu_calib_par_ms":$parMs,"cpu_calib_par_after_ms":$parAfterMs,"par_ratio":$parRatio%.3f,"par_ratio_after":$parRatioAfter%.3f,"par_ratio_max":$ParRatioMax%.2f,"barrier_calib_ms":$barrierMs,"barrier_calib_after_ms":$barrierAfterMs,"ref_barrier_ms":${RefBarrierMs}%.0f,"barrier_ratio":$barrierRatio%.3f,"steal_pct_barrier":$barrierStealPct%.2f,"steal_pct_queries":$secStealPct%.2f,"steal_pct_attempt":$attemptStealPct%.2f,"headline_comparable":$iterComparable,"iterative_comparable":$iterComparable,"barrier_state":"$barrierState","value_per_barrier":${total / barrierRatio}%.3f,"attempt":$attemptNo,"compile_exceptions":$compileExceptions}"""
-      (json,
-        if (validFinal && iterComparable) RankClean
-        else if (fastHostClean) RankFastHost
-        else RankDirty)
-    }
-
-    val json = retryUntilValid("bench-sf1")(attempt)
-    println(json)
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench-sf1] WARN: could not write $outPath: $e") }
-    spark.stop()
-    val compileExceptions = counter.count.get()
-    if (compileExceptions > 0) {
-      System.err.println(s"[bench-sf1] FAILING: $compileExceptions CompileException(s) logged")
-      sys.exit(1)
-    }
+    Bench.run(sfDir, Seq(Bench.Section("queries", SparkEntry.scaleBenchSf1)),
+      "sf1_total", outPath)
   }
 }

@@ -4,7 +4,6 @@ import graft.ingest.PropertiesFrame
 import graft.ml.Scoring
 import graft.sources.Sinks
 import graft.transform.{Clean, Geocode, Serve}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The daily batch lifecycle (SURVEY §3.2, PredictDailyMachine) as one
@@ -18,13 +17,13 @@ object PipelineCli {
 
   def main(args: Array[String]): Unit = {
     var positional = Vector.empty[String]
-    var cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    var cpus = Option.empty[Int]
     var i = 0
     while (i < args.length) {
       args(i) match {
         case "--cpus" =>
           require(i + 1 < args.length, "--cpus needs a value")
-          cpus = args(i + 1); i += 2
+          cpus = Some(args(i + 1).toInt); i += 2
         case other => positional :+= other; i += 1
       }
     }
@@ -32,19 +31,7 @@ object PipelineCli {
       "usage: PipelineCli <html_dir_or_zip> <location_csv> <out_dir> [--cpus N]")
     val Vector(htmlPath, locationCsv, outDir) = positional
 
-    val preExisting = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-daily")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // small scan splits: HTML pages fan out without a repartition
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    Sessions.run(cpus) { spark =>
       // scrape (the ScrapePropertyData stage)
       val fetchedAt = math.rint(System.currentTimeMillis() / 1000.0)
       val scraped = PropertiesFrame.scrape(spark, htmlPath, Some(fetchedAt))
@@ -71,6 +58,6 @@ object PipelineCli {
         println(s"pipeline done: ${cleaned.count()} cleaned rows, " +
           f"test MAE $mae%.2f -> $outDir")
       } finally cleaned.unpersist()
-    } finally if (!preExisting) spark.stop()
+    }
   }
 }

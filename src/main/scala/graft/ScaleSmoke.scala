@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Spark-only 100× smoke of the dedup/similarity scale families —
@@ -76,16 +76,7 @@ object ScaleSmoke {
         // were sf10-covered individually; the CHAINS now hold their
         // own invariance rows.
         "q248_dsir_select", "q123_curation_pipeline", "q198_dedup_e2e")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, created) = Sessions.getOrCreate()
     val byName = SparkEntry.defs.map(d => d.name -> d).toMap
 
     val legs = sys.env.get("SPARK_GRAFT_SMOKE_LEGS")
@@ -196,7 +187,7 @@ object ScaleSmoke {
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable =>
       System.err.println(s"[smoke] WARN: cannot write $outPath: $e") }
-    spark.stop()
+    if (created) spark.stop()
     if (!allOk) sys.exit(1)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.ingest.PropertiesFrame
 import graft.sources.Sinks
-import org.apache.spark.sql.SparkSession
 
 /** The `scrape-properties` CLI (reference entry point libs/setup.py:24-27
   * → scraping._main, libs/otokuna/scraping.py:366-410): dir-or-zip of
@@ -17,7 +16,7 @@ object ScrapeCli {
     var positional = Vector.empty[String]
     var format = "csv"
     var fetchedToday = false
-    var cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    var cpus = Option.empty[Int]
     var i = 0
     while (i < args.length) {
       args(i) match {
@@ -26,7 +25,7 @@ object ScrapeCli {
           format = args(i + 1); i += 2
         case "--cpus" =>
           require(i + 1 < args.length, "--cpus needs a value")
-          cpus = args(i + 1); i += 2
+          cpus = Some(args(i + 1).toInt); i += 2
         case "--fetched-today" => fetchedToday = true; i += 1
         case other => positional :+= other; i += 1
       }
@@ -37,21 +36,7 @@ object ScrapeCli {
     val Vector(htmlPath, outputPath) = positional
     require(Set("csv", "parquet").contains(format), s"bad format: $format")
 
-    // getOrCreate may return a pre-existing session (tests, REPL) —
-    // only stop what this main actually created
-    val preExisting = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scrape")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // small scan splits: HTML pages fan out without a repartition
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    Sessions.run(cpus) { spark =>
       val fetchedAt =
         if (fetchedToday) Some(math.rint(System.currentTimeMillis() / 1000.0))
         else None
@@ -60,6 +45,6 @@ object ScrapeCli {
       if (format == "csv") Sinks.writeCsv(df, outputPath)
       else Sinks.writeParquet(df, outputPath)
       println(s"scraped ${df.count()} properties -> $outputPath ($format)")
-    } finally if (!preExisting) spark.stop()
+    }
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,33 +8,24 @@ object Verify {
     // optional third arg (dev only; the driver passes two): run only
     // queries whose name contains any of the comma-separated substrings
     val nameFilter = args.lift(2).map(_.split(",").toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // count codegen compile fallbacks across the WHOLE registry (Bench
     // gates only the queries it times); reported at the end, strict
     // via SPARK_GRAFT_CODEGEN_STRICT=1 — not a default hard failure,
     // because a fallback is a perf bug, not a correctness one, and
     // this main IS the correctness gate
     val codegenWatch = graft.plans.CodegenWatch.install()
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // small scan splits: HTML pages fan out without a repartition
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => nameFilter.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    Sessions.run() { spark =>
+      SparkEntry.queries
+        .filter { case (name, _) => nameFilter.forall(_.exists(name.contains)) }
+        .foreach { case (name, fn) =>
+          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          }
         }
-      }
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -55,7 +45,6 @@ object Verify {
     val ce = codegenWatch.count.get()
     if (ce > 0) System.err.println(
       s"[verify] WARN: $ce codegen CompileException(s) — some stage fell back to interpreted execution")
-    spark.stop()
     if (ce > 0 && sys.env.get("SPARK_GRAFT_CODEGEN_STRICT").contains("1"))
       sys.exit(2)
   }

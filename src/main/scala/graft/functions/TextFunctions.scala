@@ -55,32 +55,7 @@ object TextFunctions {
         .otherwise(array().cast("array<string>"))
     })
 
-  /** Ratio of punctuation chars (fixed class, mirrored in oracle SQL). */
-  def punctRatio(c: Column): Column = {
-    val stripped = regexp_replace(c, "[.,!?;:'\"()\\[\\]{}-]", "")
-    when(length(c) > 0,
-      (length(c) - length(stripped)).cast("double") / length(c))
-      .otherwise(lit(0.0))
-  }
-
-  def stopwordRatio(c: Column, stopwords: Seq[String]): Column = {
-    val t = tokens(c)
-    when(size(t) > 0,
-      size(filter(t, tk => tk.isin(stopwords: _*))).cast("double") / size(t))
-      .otherwise(lit(0.0))
-  }
-
   val EnglishStopwords: Seq[String] = Seq("the", "a", "is", "of", "and")
-
-  /** Composite quality score in [0,1]: length, cleanliness, stopword
-    * density — the usual cheap pretraining-corpus filters.
-    */
-  def qualityScore(c: Column): Column = {
-    val lenScore = least(lit(1.0), tokenCount(c).cast("double") / 100.0)
-    val cleanScore = lit(1.0) - punctRatio(c)
-    val stopScore = least(lit(1.0), stopwordRatio(c, EnglishStopwords) * 5.0)
-    round(lit(0.3) * lenScore + lit(0.3) * cleanScore + lit(0.4) * stopScore, 6)
-  }
 
   /** n-gram-heuristic language ID: stopword hit counts per language,
     * deterministic argmax (declaration order wins ties), 'unknown' when
@@ -129,9 +104,9 @@ object TextFunctions {
     */
   def fingerprint(c: Column): Column = rolling_hash(c)
 
-  /** MinHash signature over shingles: k = bands*rowsPerBand universal
-    * hashes h_j(x) = (a_j*x + b_j) mod p applied to the reproducible
-    * shingle hash. Seeds come from a fixed LCG so signatures are stable
+  /** MinHash universal hashes: k = bands*rowsPerBand functions
+    * h_j(x) = (a_j*x + b_j) mod p applied to the reproducible shingle
+    * hash. Seeds come from a fixed LCG so signatures are stable
     * across runs/engines.
     */
   final val MinhashPrime = 2038074743L // prime < 2^31
@@ -140,18 +115,6 @@ object TextFunctions {
     var s = seed
     def next(): Long = { s = (s * 6364136223846793005L + 1442695040888963407L); (s >>> 33) % MinhashPrime }
     (0 until k).map(_ => (math.max(1L, next()), next()))
-  }
-
-  def minhashSignature(shinglesCol: Column, k: Int): Column = {
-    val seeds = minhashSeeds(k)
-    val seedArr = array(seeds.map { case (a, b) =>
-      struct(lit(a).as("a"), lit(b).as("b"))
-    }: _*)
-    // hash each shingle once, not once per seed (bind → 128× fewer hashes)
-    bind(transform(shinglesCol, sh => rolling_hash(sh)), hs =>
-      transform(seedArr, s =>
-        array_min(transform(hs, h =>
-          pmod(s.getField("a") * h + s.getField("b"), lit(MinhashPrime))))))
   }
 
   /** MinHash signature over pre-hashed shingles (any long hash; reduced

@@ -49,8 +49,8 @@ object Graph {
     * exchange vs 3.34 s exchange-free); no-checkpoint recomputes the
     * whole edge build per round. The re-exchange is therefore the
     * accepted trade locally; at cluster scale, where an edge-sized
-    * exchange per round is real money, re-run the A/B
-    * (PrCacheExperimentMain) before trusting this default. The
+    * exchange per round is real money, re-run the A/B recorded in
+    * bench/PRCACHE_SF1_r18.txt before trusting this default. The
     * round-12 sf1 profile that motivated the current shape: the
     * one-time setup (edge distinct + a second full edge exchange for
     * the outdeg join) cost 2× the whole 3-round loop.

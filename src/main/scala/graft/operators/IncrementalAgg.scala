@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 /** Incremental materialized-view maintenance — the aggregation twin of
@@ -26,8 +27,10 @@ import org.apache.spark.sql.functions._
   * full-outer join of old state and delta state on the group key —
   * with the state read from a table bucketed on `g`
   * ([[writeState]] / `spark.table`), the join consumes the scan's
-  * hash partitioning and only the delta shuffles
-  * (ScaleDesignSpec pins zero Exchange above the state scan). The
+  * hash partitioning and only the delta shuffles, under any
+  * `spark.sql.shuffle.partitions`: the delta state is repartitioned to
+  * the stored table's bucket count (ScaleDesignSpec pins zero Exchange
+  * above the state scan at the session's and at 32 partitions). The
   * merged output has the state schema, so it writes straight back:
   * the loop is closed and each day costs O(delta + |groups|).
   */
@@ -64,7 +67,8 @@ object IncrementalAgg {
     */
   def mergeDelta(st: DataFrame, delta: DataFrame, group: Column,
       x: Column, digits: Int): DataFrame = {
-    val d = state(delta, group, x, digits)
+    val fresh = state(delta, group, x, digits)
+    val d = bucketsOnG(st).fold(fresh)(n => fresh.repartition(n, col("g")))
     def both(a: Column, b: Column, f: (Column, Column) => Column) =
       when(a.isNull, b).when(b.isNull, a).otherwise(f(a, b))
     st.select(col("g"), col("cnt").as("a_cnt"), col("sum_c").as("a_sum"),
@@ -79,6 +83,17 @@ object IncrementalAgg {
         both(col("a_min"), col("b_min"), least(_, _)).as("min_c"),
         both(col("a_max"), col("b_max"), greatest(_, _)).as("max_c"))
   }
+
+  /** Bucket count of a state read straight from a table bucketed on
+    * `g`, from the table's catalog entry. The merge join then meets the
+    * scan's `hashpartitioning(g, buckets)` on both sides; left to the
+    * session's shuffle partitions, a count that differs from the
+    * buckets makes the planner re-shuffle the state scan instead.
+    */
+  private def bucketsOnG(st: DataFrame): Option[Int] =
+    st.queryExecution.analyzed.collectFirst {
+      case r: LogicalRelation => r.catalogTable.flatMap(_.bucketSpec)
+    }.flatten.filter(_.bucketColumnNames == Seq("g")).map(_.numBuckets)
 
   /** The user-facing view over a state: unscale sum/min/max back to
     * doubles (single exact divisions) and derive avg — mergeable

@@ -31,15 +31,15 @@ object CoreQueries {
     * two are value-identical for either sign (the FP-rounding hazard
     * of floor(x+0.5) lives only within 1 ulp of exact halves, which
     * the contract excludes); equality verified against round() on all
-    * graded SFs (RoundExperimentMain).
+    * graded SFs (OPTIMIZATION_r17.md §1; FsumRoundingSpec pins it).
     *
     * CALLER GUARD (r17 advisor): nothing here enforces the contract —
     * a caller passing a column with MORE true decimals than `digits`
     * (e.g. fsum(price * ratio, 2) where the product carries full
     * double precision) silently changes sums vs round(). New call
     * sites must pass the column's exact fixed-point scale, or verify
-    * against round() on a sample first (RoundExperimentMain is the
-    * harness for that).
+    * against round() on a sample first (FsumRoundingSpec is the check
+    * to extend).
     */
   private def fsum(c: Column, digits: Int): Column = {
     val scale = math.pow(10, digits)
@@ -116,7 +116,7 @@ object CoreQueries {
     * order — Catalyst does not do this rewrite itself, and it changes
     * what the big shuffle moves from one wide row per LINE ITEM to one
     * narrow row per ORDER (~4× fewer rows here, far fewer columns;
-    * measured 0.97 s → 0.84 s at sf0.1, Q03ExperimentMain — the gap
+    * measured 0.97 s → 0.84 s at sf0.1, SCALING.md "Joins" — the gap
     * widens with fanout at 100 TB). Legal because the exact-cents
     * revenue is an integer SUM and the item count a COUNT, both
     * decomposable through the per-order regrouping with bit-identical

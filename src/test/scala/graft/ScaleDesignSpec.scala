@@ -451,35 +451,43 @@ class ScaleDesignSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
       "false")
+    // the contract must hold under any shuffle-partition count: run at
+    // the session's own setting and at 32 (the 32-core host's), which
+    // differs from the state's 8 buckets
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
     try {
-      val ords = Tables(spark, sfDir, "orders")
-      IncrementalAgg.writeState(
-        IncrementalAgg.state(ords.filter(col("o_orderkey") % 5 =!= 0),
-          col("o_custkey"), col("o_totalprice"), 2),
-        "graft_spec_mv_state", buckets = 8)
-      val day2 = IncrementalAgg.mergeDelta(
-        spark.table("graft_spec_mv_state"),
-        ords.filter(col("o_orderkey") % 5 === 0),
-        col("o_custkey"), col("o_totalprice"), 2)
-      day2.collect()
-      val all = flatten(day2.queryExecution.executedPlan)
-      val scan = all.collectFirst {
-        case s: FileSourceScanExec if s.relation.location.rootPaths
-          .exists(_.toString.contains("graft_spec_mv_state")) => s
-      }.getOrElse(fail("no scan of the stored MV state"))
-      assert(scan.toString.contains("Bucketed: true"))
-      val aboveScan = all.takeWhile(_ ne scan) // preorder: root..scan
-      val joinIdx = aboveScan.lastIndexWhere(_.nodeName.contains("Join"))
-      assert(joinIdx >= 0, "state scan must feed a merge join")
-      assert(!aboveScan.drop(joinIdx).exists(_.isInstanceOf[Exchange]),
-        "no Exchange between the state scan and its consuming join:\n" +
-          day2.queryExecution.executedPlan)
-      // and the monoid law holds at table scale too
-      val fullOrd = IncrementalAgg.state(ords, col("o_custkey"),
-        col("o_totalprice"), 2)
-      assert(day2.exceptAll(fullOrd).count() === 0 &&
-        fullOrd.exceptAll(day2).count() === 0)
+      for (parts <- Seq(sessionParts, "32")) {
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        val ords = Tables(spark, sfDir, "orders")
+        IncrementalAgg.writeState(
+          IncrementalAgg.state(ords.filter(col("o_orderkey") % 5 =!= 0),
+            col("o_custkey"), col("o_totalprice"), 2),
+          "graft_spec_mv_state", buckets = 8)
+        val day2 = IncrementalAgg.mergeDelta(
+          spark.table("graft_spec_mv_state"),
+          ords.filter(col("o_orderkey") % 5 === 0),
+          col("o_custkey"), col("o_totalprice"), 2)
+        day2.collect()
+        val all = flatten(day2.queryExecution.executedPlan)
+        val scan = all.collectFirst {
+          case s: FileSourceScanExec if s.relation.location.rootPaths
+            .exists(_.toString.contains("graft_spec_mv_state")) => s
+        }.getOrElse(fail("no scan of the stored MV state"))
+        assert(scan.toString.contains("Bucketed: true"))
+        val aboveScan = all.takeWhile(_ ne scan) // preorder: root..scan
+        val joinIdx = aboveScan.lastIndexWhere(_.nodeName.contains("Join"))
+        assert(joinIdx >= 0, "state scan must feed a merge join")
+        assert(!aboveScan.drop(joinIdx).exists(_.isInstanceOf[Exchange]),
+          "no Exchange between the state scan and its consuming join:\n" +
+            day2.queryExecution.executedPlan)
+        // and the monoid law holds at table scale too
+        val fullOrd = IncrementalAgg.state(ords, col("o_custkey"),
+          col("o_totalprice"), 2)
+        assert(day2.exceptAll(fullOrd).count() === 0 &&
+          fullOrd.exceptAll(day2).count() === 0)
+      }
     } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     }

@@ -3,9 +3,8 @@
 # way): tools/run_main.sh graft.Bench [args...]
 # Env passthrough: SPARK_GRAFT_*, SPARK_DRIVER_MEM.
 set -e
-# GRAFT_CLASSES overrides the compiled-classes dir (round 17: the
-# pinned-binary A/B runs the r14 worktree's classes through the same
-# launcher so the JVM/classpath shape is identical across binaries)
+# GRAFT_CLASSES overrides the compiled-classes dir (an A/B of two
+# builds then runs both through the same JVM/classpath shape)
 CP="${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}"
 for j in /opt/spark/jars/*.jar; do CP="$CP:$j"; done
 ADDOPENS=""
