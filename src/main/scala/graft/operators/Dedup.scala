@@ -21,6 +21,70 @@ object Dedup {
     df.groupBy(key.as("dedup_key"))
       .agg(min(id).as("rep_id"), count(lit(1)).as("group_size"))
 
+  /** The duplicate-collapse gate: collapse once ≥20% of the rows are
+    * byte-identical on the pair function's input (`distinct` may be an
+    * approx_count_distinct — its ~2% error sits well inside the margin,
+    * and both branches are exact).
+    */
+  private[operators] def duplicateHeavy(rows: Long, distinct: Long): Boolean =
+    distinct * 5L <= rows * 4L
+
+  /** DUPLICATE COLLAPSE (round 12, the q36/q37 move; round 14 for the
+    * edit-distance joins) for a pair function that is a pure function
+    * of its `keys` columns: rows with identical keys are
+    * interchangeable through the quadratic stage, so on a
+    * duplicate-saturated corpus one representative per key group — the
+    * `min(id)` — runs `pairs`, and the surviving pairs expand back to
+    * id pairs with output-sized member joins ([[expandGroups]]). On a
+    * mostly-unique corpus the group-by and member joins are pure
+    * overhead, so callers gate `collapse` (a hint or [[duplicateHeavy]]).
+    *
+    * `rows` carries `id` plus `keys`; `pairs` maps such a frame to
+    * (id_a, id_b, value) with id_a < id_b. `within` is the value of a
+    * pair inside one group, evaluated over the representative row (null
+    * means no within-group pair). With `collapse` off `pairs` runs on
+    * `rows` directly — no group-by, no member join, no second reference
+    * to the input (q95's dense path relies on it).
+    */
+  private[operators] def collapsedPairs(rows: DataFrame, keys: Seq[String],
+      collapse: Boolean, within: Column)(
+      pairs: DataFrame => DataFrame): DataFrame =
+    if (!collapse) pairs(rows)
+    else {
+      val k = keys.map(col)
+      val groups = Checkpoints.truncate(
+        rows.groupBy(k: _*).agg(min(col("id")).as("id")))
+      val members = Checkpoints.truncate(
+        rows.join(groups.select(k :+ col("id").as("gid"): _*), keys)
+          .select(col("id"), col("gid")))
+      val reps = groups.select(col("id") +: k: _*)
+      expandGroups(reps, members, pairs(reps), within)
+    }
+
+  /** Expands pairs of group representatives (id_a, id_b, value) over
+    * `members` (id, gid) — two member joins, `least`/`greatest` ids —
+    * and adds every within-group pair at `within`, evaluated over
+    * `reps` (id = the group key; null means no within-group pair).
+    */
+  private[operators] def expandGroups(reps: DataFrame, members: DataFrame,
+      repPairs: DataFrame, within: Column): DataFrame = {
+    val value = repPairs.columns(2)
+    val cross = repPairs
+      .join(members.select(col("gid").as("id_a"), col("id").as("ia")),
+        Seq("id_a"))
+      .join(members.select(col("gid").as("id_b"), col("id").as("ib")),
+        Seq("id_b"))
+      .select(least(col("ia"), col("ib")).as("id_a"),
+        greatest(col("ia"), col("ib")).as("id_b"), col(value))
+    val same = reps.select(col("id").as("gid"), within.as(value))
+      .filter(col(value).isNotNull)
+      .join(members.select(col("gid"), col("id").as("id_a")), Seq("gid"))
+      .join(members.select(col("gid"), col("id").as("id_b")), Seq("gid"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), col(value))
+    cross.union(same)
+  }
+
   /** Exact all-pairs n-gram Jaccard ≥ threshold. Two exact strategies,
     * both fed by shingles hashed to longs (xxhash64: collision-free
     * w.h.p, so set sizes/intersections are unchanged) and materialized
@@ -111,9 +175,7 @@ object Dedup {
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
     val collapse = AdaptiveStrategy.cached("ngram-collapse", planHash) {
-      // collapse once ≥20% of documents are byte-identical at the
-      // shingle level (well past approx_count_distinct's ~2% error)
-      gateStats._2 * 5L <= gateStats._1 * 4L
+      duplicateHeavy(gateStats._1, gateStats._2)
     }
     val usePrefix = prefixFilter.getOrElse {
       AdaptiveStrategy.cached("ngram-prefix", planHash) {
@@ -124,10 +186,10 @@ object Dedup {
     // tiny shuffled bytes): pin its exchanges past the blocker gate —
     // unpinned+AQE-starved it ground 1.4e8 sf1 candidates through ~2
     // reducers (~100 s); pinned it spreads them over every core
-    val pin = AdaptiveStrategy.cachedLong("ngram-postings", planHash) {
-      gateStats._3
-    } > Explosive.pinRows(docs)
-    def pairsOver(sh: DataFrame, statsKey: String): DataFrame = {
+    val pin = Explosive.pinGate(docs, "ngram-postings", planHash)(gateStats._3)
+    val statsKey = if (collapse) "ngram-cand-collapsed" else "ngram-cand"
+    collapsedPairs(shAll, Seq("sh"), collapse,
+        when(lit(1.0) >= threshold, lit(1.0))) { sh =>
       // an explicit prefixFilter hint's documented purpose is to skip
       // the stats pass entirely — the budget guard must not silently
       // reintroduce a full corpus aggregate for hinted hot-path callers
@@ -141,32 +203,11 @@ object Dedup {
       if (prefixFilter.isEmpty ||
           sh.sparkSession.conf.getOption(NgramPairsMaxKey).isDefined)
         guardCandidateBudget(sh, statsKey, planHash)
-      else AdaptiveStrategy.peekLong(statsKey, planHash)
+      else AdaptiveStrategy.peek[Long](statsKey, planHash)
         .foreach(est => enforceCandidateBudget(sh, est))
       if (usePrefix) prefixFilterPairs(sh, threshold, pin)
       else countJoinPairs(sh, threshold, pin)
     }
-    if (!collapse) return pairsOver(shAll, "ngram-cand")
-    val groups = Checkpoints.truncate(
-      shAll.groupBy(col("sh")).agg(min(col("id")).as("id")))
-    val members = Checkpoints.truncate(
-      shAll.join(groups.select(col("sh"), col("id").as("gid")), Seq("sh"))
-        .select(col("id"), col("gid")))
-    val groupPairs =
-      pairsOver(groups.select(col("id"), col("sh")), "ngram-cand-collapsed")
-    val cross = groupPairs
-      .join(members.select(col("gid").as("id_a"), col("id").as("ia")),
-        Seq("id_a"))
-      .join(members.select(col("gid").as("id_b"), col("id").as("ib")),
-        Seq("id_b"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("jaccard"))
-    val same = members.select(col("gid"), col("id").as("id_a"))
-      .join(members.select(col("gid"), col("id").as("id_b")), Seq("gid"))
-      .filter(col("id_a") < col("id_b") && lit(1.0) >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(lit(1.0), 6).as("jaccard"))
-    cross.union(same)
   }
 
   private def chooseNgramStrategy(sh: DataFrame, planHash: Int,
@@ -189,7 +230,7 @@ object Dedup {
     */
   private def candidatePairsEstimate(sh: DataFrame, statsKey: String,
       planHash: Int): Long =
-    AdaptiveStrategy.cachedLong(statsKey, planHash) {
+    AdaptiveStrategy.cached(statsKey, planHash) {
       val stats = sh.select(explode(col("sh")).as("g"))
         .groupBy(col("g")).agg(count(lit(1)).as("df"))
         .agg(sum(col("df").cast("double") * (col("df").cast("double") - 1))
@@ -247,13 +288,10 @@ object Dedup {
       pin: Boolean): DataFrame = {
     val inv = sh.select(col("id"), size(col("sh")).cast("long").as("n"),
       explode(col("sh")).as("g"))
-    val a = Explosive.maybePin(
-      inv.select(col("id").as("id_a"), col("n").as("n_a"), col("g")),
-      pin, col("g"))
-    val b = Explosive.maybePin(
-      inv.select(col("id").as("id_b"), col("n").as("n_b"), col("g")),
-      pin, col("g"))
-    a.join(b, Seq("g"))
+    Explosive.blockerJoin(
+        inv.select(col("id").as("id_a"), col("n").as("n_a"), col("g")),
+        inv.select(col("id").as("id_b"), col("n").as("n_b"), col("g")),
+        Seq("g"), pin)
       .filter(col("id_a") < col("id_b") &&
         col("n_a") >= ceil(col("n_b") * threshold) &&
         col("n_b") >= ceil(col("n_a") * threshold))
@@ -282,10 +320,9 @@ object Dedup {
       .withColumn("rk", row_number().over(byRarity))
       .filter(col("rk") <= col("n_sh") - ceil(col("n_sh") * threshold).cast("int") + 1)
       .select(col("id"), col("g"))
-    val cand = Explosive.maybePin(
-        prefixInv.select(col("id").as("p_id"), col("g")), pin, col("g"))
-      .join(Explosive.maybePin(
-        inv.select(col("id").as("f_id"), col("g")), pin, col("g")), Seq("g"))
+    val cand = Explosive.blockerJoin(
+        prefixInv.select(col("id").as("p_id"), col("g")),
+        inv.select(col("id").as("f_id"), col("g")), Seq("g"), pin)
       .filter(col("p_id") =!= col("f_id"))
       .select(least(col("p_id"), col("f_id")).as("id_a"),
         greatest(col("p_id"), col("f_id")).as("id_b"))
@@ -338,21 +375,19 @@ object Dedup {
     val sh = shQuery.truncated
     val inv = sh.select(col("id"), size(col("sh")).cast("long").as("nsh"),
       explode(col("sh")).as("g"))
-    val pin = AdaptiveStrategy.cachedLong("ngram-postings",
+    val pin = Explosive.pinGate(docs, "ngram-postings",
         shQuery.queryExecution.analyzed.semanticHash()) {
       sh.agg(coalesce(sum(size(col("sh")).cast("long")), lit(0L)))
         .head().getLong(0)
-    } > Explosive.pinRows(docs)
+    }
     val capped = dfCap.fold(inv) { c =>
       val rare = inv.groupBy(col("g")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= c).select(col("g"))
       inv.join(rare, Seq("g"))
     }
-    val a = Explosive.maybePin(capped.select(col("id").as("id_a"),
-      col("nsh").as("n_a"), col("g")), pin, col("g"))
-    val b = Explosive.maybePin(
-      capped.select(col("id").as("id_b"), col("g")), pin, col("g"))
-    a.join(b, Seq("g"))
+    Explosive.blockerJoin(
+        capped.select(col("id").as("id_a"), col("nsh").as("n_a"), col("g")),
+        capped.select(col("id").as("id_b"), col("g")), Seq("g"), pin)
       .filter(col("id_a") =!= col("id_b"))
       .groupBy(col("id_a"), col("id_b"), col("n_a"))
       .agg(count(lit(1)).as("inter"))
@@ -383,35 +418,14 @@ object Dedup {
     val sh = shQuery.truncated
     val sig = sh.withColumn("sig",
       graft.plans.MinhashSignature.minhash_signature(col("sh"), k))
-    val banded = sig.select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          bd => slice(col("sig"), bd * rowsPerBand + 1, lit(rowsPerBand)))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_sig")
-    // Skew guard: a band bucket of B docs yields B² candidate rows. A
-    // bucket past maxBucketSize means a giant near-identical cluster —
-    // cap it (those docs still pair up via their other 31 bands and/or
-    // the exact-dedup pass that should precede near-dedup at scale).
-    val bucketSizes = banded.groupBy(col("band"), col("band_sig"))
-      .agg(count(lit(1)).as("__bs"))
-    val bounded = banded.join(bucketSizes, Seq("band", "band_sig"))
-      .filter(col("__bs") <= maxBucketSize)
-      .drop("__bs")
     // band self-join is the explosive blocker: pin its exchanges past
     // the blocker gate (banded rows = docs × bands) so Σ_bucket n²
     // candidate emission isn't AQE-coalesced; below the gate leave it
     // broadcastable
-    val pin = AdaptiveStrategy.cachedLong("lsh-docs",
-        shQuery.queryExecution.analyzed.semanticHash()) {
-      sh.count()
-    } * bands > Explosive.pinRows(docs)
-    val ca = Explosive.maybePin(bounded.select(col("id").as("id_a"),
-      col("band"), col("band_sig")), pin, col("band"), col("band_sig"))
-    val cb = Explosive.maybePin(bounded.select(col("id").as("id_b"),
-      col("band"), col("band_sig")), pin, col("band"), col("band_sig"))
-    val candidates = ca.join(cb, Seq("band", "band_sig"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val pin = Explosive.pinGate(docs, "lsh-docs",
+        shQuery.queryExecution.analyzed.semanticHash(), bands)(sh.count())
+    val candidates =
+      bandCandidates(sig, bands, rowsPerBand, maxBucketSize, pin)
     // exact verify on the (small) candidate set
     val sets = sh.select(col("id"), col("sh"))
     candidates
@@ -424,14 +438,50 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
+  /** Banded-LSH candidates shared by [[minhashLshPairs]] and
+    * [[cosinePairsApprox]]: the (id, sig) rows' signature is sliced
+    * into `bands` bands of `rowsPerBand` entries, rows agreeing on a
+    * whole band share a bucket, and every distinct (id_a < id_b) pair
+    * sharing any bucket is a candidate. The slices are a literal array,
+    * not transform(sequence): the band count is a plan-time constant,
+    * and the higher-order transform is CodegenFallback (the
+    * [[simhashSigPairs]] form). The band self-join is the explosive
+    * blocker, pinned per `pin` ([[Explosive.blockerJoin]]).
+    *
+    * Skew guard: a band bucket of B docs yields B² candidate rows. A
+    * bucket past maxBucketSize means a giant near-identical cluster —
+    * cap it (those docs still pair up via their other bands and/or the
+    * exact-dedup pass that should precede near-dedup at scale).
+    */
+  private def bandCandidates(rows: DataFrame, bands: Int, rowsPerBand: Int,
+      maxBucketSize: Long, pin: Boolean): DataFrame = {
+    val banded = rows.select(col("id"),
+        posexplode(array((0 until bands).map(bd =>
+          slice(col("sig"), bd * rowsPerBand + 1, rowsPerBand)): _*)))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "band_sig")
+    val bucketSizes = banded.groupBy(col("band"), col("band_sig"))
+      .agg(count(lit(1)).as("__bs"))
+    val bounded = banded.join(bucketSizes, Seq("band", "band_sig"))
+      .filter(col("__bs") <= maxBucketSize)
+      .drop("__bs")
+    Explosive.blockerJoin(
+        bounded.select(col("id").as("id_a"), col("band"), col("band_sig")),
+        bounded.select(col("id").as("id_b"), col("band"), col("band_sig")),
+        Seq("band", "band_sig"), pin)
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+  }
+
   /** Shared signature-level stage of [[simhashPairs]] and
-    * [[simhashClusters]]: per-doc signatures (truncated) and the
-    * qualifying DISTINCT-SIGNATURE pairs from the pigeonhole band
-    * join. Everything quadratic happens here, over distinct sigs —
-    * the doc-level expansion is the caller's (output-sized) business.
+    * [[simhashClusters]]: per-doc signatures (truncated), the distinct
+    * signatures (truncated), and the qualifying DISTINCT-SIGNATURE
+    * pairs from the pigeonhole band join. Everything quadratic happens
+    * here, over distinct sigs — the doc-level expansion is the
+    * caller's (output-sized) business.
     */
   private def simhashSigPairs(docs: DataFrame, id: Column, text: Column,
-      maxHamming: Int, nBits: Int): (DataFrame, DataFrame) = {
+      maxHamming: Int, nBits: Int): (DataFrame, DataFrame, DataFrame) = {
     val chunks = maxHamming + 1
     val chunkBits = nBits / chunks
     val sigQuery = Explosive.ensureMapParallelism(
@@ -452,25 +502,21 @@ object Dedup {
       .withColumnRenamed("pos", "chunk")
       .withColumnRenamed("col", "chunk_val")
     // chunk self-join: same explosive-blocker shape, same gated pin
-    val pin = AdaptiveStrategy.cachedLong("simhash-sigs",
-        sigQuery.queryExecution.analyzed.semanticHash()) {
-      groups.count()
-    } * chunks > Explosive.pinRows(docs)
-    val ga = Explosive.maybePin(blocked.select(col("sig").as("sig_a"),
-      col("chunk"), col("chunk_val")), pin, col("chunk"), col("chunk_val"))
-    val gb = Explosive.maybePin(blocked.select(col("sig").as("sig_b"),
-      col("chunk"), col("chunk_val")), pin, col("chunk"), col("chunk_val"))
+    val pin = Explosive.pinGate(docs, "simhash-sigs",
+        sigQuery.queryExecution.analyzed.semanticHash(), chunks)(groups.count())
     // verify BEFORE the dedup: bit_count(xor) is a codegen'd streaming
     // filter, so the distinct shuffles only surviving SIGNATURE pairs
     // (a pair colliding in several chunks appears up to `chunks` times)
-    val sigPairs = Checkpoints.truncate(ga
-      .join(gb, Seq("chunk", "chunk_val"))
+    val sigPairs = Checkpoints.truncate(Explosive.blockerJoin(
+        blocked.select(col("sig").as("sig_a"), col("chunk"), col("chunk_val")),
+        blocked.select(col("sig").as("sig_b"), col("chunk"), col("chunk_val")),
+        Seq("chunk", "chunk_val"), pin)
       .filter(col("sig_a") < col("sig_b"))
       .withColumn("hamming",
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("sig_a", "sig_b", "hamming").distinct())
-    (sig, sigPairs)
+    (sig, groups, sigPairs)
   }
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming.
@@ -502,19 +548,14 @@ object Dedup {
     */
   def simhashPairs(docs: DataFrame, id: Column, text: Column,
       maxHamming: Int = 3, nBits: Int = 32): DataFrame = {
-    val (sig, sigPairs) = simhashSigPairs(docs, id, text, maxHamming, nBits)
-    val cross = sigPairs
-      .join(sig.select(col("sig").as("sig_a"), col("id").as("ia")),
-        Seq("sig_a"))
-      .join(sig.select(col("sig").as("sig_b"), col("id").as("ib")),
-        Seq("sig_b"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("hamming"))
-    val same = sig.select(col("sig"), col("id").as("id_a"))
-      .join(sig.select(col("sig"), col("id").as("id_b")), Seq("sig"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0L).as("hamming"))
-    cross.union(same)
+    val (sig, groups, sigPairs) =
+      simhashSigPairs(docs, id, text, maxHamming, nBits)
+    // the signature is the group key: members join on it directly
+    expandGroups(groups.select(col("sig").as("id")),
+      sig.select(col("id"), col("sig").as("gid")),
+      sigPairs.select(col("sig_a").as("id_a"), col("sig_b").as("id_b"),
+        col("hamming")),
+      lit(0L))
   }
 
   /** Doc-level dedup clusters from SimHash — (node, component, is_rep,
@@ -544,7 +585,7 @@ object Dedup {
     */
   def simhashClusters(docs: DataFrame, id: Column, text: Column,
       maxHamming: Int = 3, nBits: Int = 32): DataFrame = {
-    val (sig, sigPairs) = simhashSigPairs(docs, id, text, maxHamming, nBits)
+    val (sig, _, sigPairs) = simhashSigPairs(docs, id, text, maxHamming, nBits)
     val sigCC = Components.connectedComponents(
       sigPairs.select(col("sig_a").as("src"), col("sig_b").as("dst")),
       Some(sig.select(col("sig").as("node")).distinct()))
@@ -600,7 +641,6 @@ object Dedup {
       if (gridSide > 0) gridSide
       else deriveGridSide(
         emb.sparkSession.sessionState.conf.numShufflePartitions)
-    val raw0 = emb.select(id.as("id"), vec.as("v"))
     // Collapse IDENTICAL vectors before the quadratic stage (round 12):
     // cosine is a pure function of the two vectors, and the corpora
     // this operator exists for are duplicate-saturated — at sf1 the
@@ -613,75 +653,39 @@ object Dedup {
     // when the CALLER knows it cannot pay — the dense APSS path feeds
     // vocab-wide synthesized vectors (~32 KB each) whose group-by
     // shuffle costs more than the few duplicates it would remove
-    // (measured +8 s on q95 at sf1); with it off, the id doubles as
-    // its own group of one and the same plan shape runs.
-    val raw =
-      if (collapseDuplicates) raw0
-      else raw0.select(col("id"), col("v"), col("id").as("gid"))
-    val groups =
-      if (collapseDuplicates) Checkpoints.truncate(
-        raw.groupBy(col("v")).agg(min(col("id")).as("gid")))
-      else raw.select(col("v"), col("gid"))
-    val members =
-      if (collapseDuplicates) Checkpoints.truncate(
-        raw.join(groups, Seq("v")).select(col("id"), col("gid")))
-      else raw.select(col("id"), col("gid"))
-    val e = groups
-      .withColumn("norm", sqrt(dot_product(col("v"), col("v"))))
-      .withColumn("blk", pmod(xxhash64(col("gid")), lit(g)).cast("int"))
-    // the tile join is an explosive blocker BY CONSTRUCTION — tiny
-    // shuffled bytes (the replicated vector table), quadratic
-    // post-join pair work — so its exchanges are pinned with
-    // user-numbered repartitions unconditionally (the q207/q34
-    // playbook): AQE sizes reducers by shuffled bytes and would
-    // coalesce the tile tasks onto a few cores exactly when the
-    // per-tile work is heaviest
-    val n = emb.sparkSession.sessionState.conf.numShufflePartitions
-    val left = e.select(col("gid").as("gid_l"), col("v").as("v_l"),
-        col("norm").as("n_l"), col("blk").as("ti"))
-      .withColumn("tj", explode(sequence(col("ti"), lit(g - 1))))
-      .repartition(n, col("ti"), col("tj"))
-    val right = e.select(col("gid").as("gid_r"), col("v").as("v_r"),
-        col("norm").as("n_r"), col("blk").as("tj"))
-      .withColumn("ti", explode(sequence(lit(0), col("tj"))))
-      .repartition(n, col("ti"), col("tj"))
-    val survivors = left.join(right, Seq("ti", "tj"))
-      // off-diagonal tiles see each pair once; diagonal tiles see both
-      // orderings, so break the tie on the group id there
-      .filter(col("ti") < col("tj") || col("gid_l") < col("gid_r"))
-      .withColumn("cosine",
-        dot_product(col("v_l"), col("v_r")) / (col("n_l") * col("n_r")))
-      .filter(col("cosine") >= threshold)
-      .select(col("gid_l"), col("gid_r"), col("cosine"))
-    // With the collapse off every group is the singleton {id}: the
-    // survivors' gids ARE the ids, the member joins are identities,
-    // and the same-group branch is provably empty. Emit directly —
-    // each skipped branch would otherwise RE-REFERENCE the caller's
-    // (possibly expensive, e.g. q95's vocab-wide densify) vector
-    // subplan, which only the real collapse path truncates.
-    if (!collapseDuplicates)
-      return survivors.select(
-        least(col("gid_l"), col("gid_r")).as("id_a"),
-        greatest(col("gid_l"), col("gid_r")).as("id_b"),
-        round(col("cosine"), 6).as("cosine"))
-    val cross = survivors
-      .join(members.select(col("gid").as("gid_l"), col("id").as("ia")),
-        Seq("gid_l"))
-      .join(members.select(col("gid").as("gid_r"), col("id").as("ib")),
-        Seq("gid_r"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        round(col("cosine"), 6).as("cosine"))
-    val self = e
-      .withColumn("cosine",
-        dot_product(col("v"), col("v")) / (col("norm") * col("norm")))
-      .filter(col("cosine") >= threshold)
-      .select(col("gid"), col("cosine"))
-      .join(members.select(col("gid"), col("id").as("id_a")), Seq("gid"))
-      .join(members.select(col("gid"), col("id").as("id_b")), Seq("gid"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-    cross.union(self)
+    // (measured +8 s on q95 at sf1); with it off the tile join runs on
+    // the input rows and nothing re-references the caller's (possibly
+    // expensive, e.g. q95's vocab-wide densify) vector subplan.
+    val norm = sqrt(dot_product(col("v"), col("v")))
+    val self = dot_product(col("v"), col("v")) / (norm * norm)
+    collapsedPairs(emb.select(id.as("id"), vec.as("v")), Seq("v"),
+        collapseDuplicates, when(self >= threshold, round(self, 6))) { reps =>
+      val e = reps.select(col("v"), col("id").as("gid"))
+        .withColumn("norm", norm)
+        .withColumn("blk", pmod(xxhash64(col("gid")), lit(g)).cast("int"))
+      // the tile join is an explosive blocker BY CONSTRUCTION — tiny
+      // shuffled bytes (the replicated vector table), quadratic
+      // post-join pair work — so its exchanges are pinned
+      // unconditionally (the q207/q34 playbook): AQE sizes reducers by
+      // shuffled bytes and would coalesce the tile tasks onto a few
+      // cores exactly when the per-tile work is heaviest
+      val left = e.select(col("gid").as("gid_l"), col("v").as("v_l"),
+          col("norm").as("n_l"), col("blk").as("ti"))
+        .withColumn("tj", explode(sequence(col("ti"), lit(g - 1))))
+      val right = e.select(col("gid").as("gid_r"), col("v").as("v_r"),
+          col("norm").as("n_r"), col("blk").as("tj"))
+        .withColumn("ti", explode(sequence(lit(0), col("tj"))))
+      Explosive.blockerJoin(left, right, Seq("ti", "tj"), pin = true)
+        // off-diagonal tiles see each pair once; diagonal tiles see
+        // both orderings, so break the tie on the group id there
+        .filter(col("ti") < col("tj") || col("gid_l") < col("gid_r"))
+        .withColumn("cosine",
+          dot_product(col("v_l"), col("v_r")) / (col("n_l") * col("n_r")))
+        .filter(col("cosine") >= threshold)
+        .select(least(col("gid_l"), col("gid_r")).as("id_a"),
+          greatest(col("gid_l"), col("gid_r")).as("id_b"),
+          round(col("cosine"), 6).as("cosine"))
+    }
   }
 
   /** Tile-grid side for [[cosinePairs]] when the caller doesn't pass
@@ -718,28 +722,9 @@ object Dedup {
       .withColumn("sig",
         graft.plans.SrpSignature.srp_signature(col("v"), nPlanes, seed))
     val e = eQuery.truncated
-    val banded = e.select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          bd => slice(col("sig"), bd * rowsPerBand + 1, lit(rowsPerBand)))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_sig")
-    val bucketSizes = banded.groupBy(col("band"), col("band_sig"))
-      .agg(count(lit(1)).as("__bs"))
-    val bounded = banded.join(bucketSizes, Seq("band", "band_sig"))
-      .filter(col("__bs") <= maxBucketSize)
-      .drop("__bs")
-    val pin = AdaptiveStrategy.cachedLong("srp-vecs",
-        eQuery.queryExecution.analyzed.semanticHash()) {
-      e.count()
-    } * bands > Explosive.pinRows(emb)
-    val ca = Explosive.maybePin(bounded.select(col("id").as("id_a"),
-      col("band"), col("band_sig")), pin, col("band"), col("band_sig"))
-    val cb = Explosive.maybePin(bounded.select(col("id").as("id_b"),
-      col("band"), col("band_sig")), pin, col("band"), col("band_sig"))
-    val candidates = ca.join(cb, Seq("band", "band_sig"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    candidates
+    val pin = Explosive.pinGate(emb, "srp-vecs",
+        eQuery.queryExecution.analyzed.semanticHash(), bands)(e.count())
+    bandCandidates(e, bands, rowsPerBand, maxBucketSize, pin)
       .join(e.select(col("id").as("id_a"), col("v").as("v_a"),
         col("norm").as("n_a")), Seq("id_a"))
       .join(e.select(col("id").as("id_b"), col("v").as("v_b"),
@@ -915,9 +900,8 @@ object Dedup {
     // stage, so on a replica-heavy corpus (sf1: 10 near-copies per doc,
     // all sharing their 80-char prefix verbatim) one representative per
     // distinct (p, blk) carries the verify and survivors expand through
-    // member joins, within-group pairs emitted at distance 0 directly —
-    // the [[ngramJaccardPairs]] / [[StringJoin.editDistancePairs]]
-    // pattern, gated the same way (≥20% duplicates) because on a
+    // member joins, within-group pairs emitted at distance 0 directly
+    // ([[collapsedPairs]]), gated on [[duplicateHeavy]] because on a
     // mostly-unique corpus the group-by + expansion joins are pure
     // overhead.
     val planHash = d.queryExecution.analyzed.semanticHash()
@@ -929,36 +913,16 @@ object Dedup {
     }
     val collapse = collapseDups.getOrElse(
       AdaptiveStrategy.cached("edblock-collapse", planHash) {
-        dupStats._2 * 5L <= dupStats._1 * 4L
+        duplicateHeavy(dupStats._1, dupStats._2)
       })
-    if (!collapse) blockedDpPairs(d, maxDist)
-    else {
-      val groups = Checkpoints.truncate(
-        d.groupBy(col("p"), col("blk")).agg(min(col("id")).as("id")))
-      val members = Checkpoints.truncate(
-        d.join(groups.select(col("p"), col("blk"), col("id").as("gid")),
-            Seq("p", "blk"))
-          .select(col("id"), col("gid")))
-      val cross = blockedDpPairs(
-          groups.select(col("id"), col("p"), col("blk")), maxDist)
-        .join(members.select(col("gid").as("id_a"), col("id").as("ia")),
-          Seq("id_a"))
-        .join(members.select(col("gid").as("id_b"), col("id").as("ib")),
-          Seq("id_b"))
-        .select(least(col("ia"), col("ib")).as("id_a"),
-          greatest(col("ia"), col("ib")).as("id_b"), col("dist"))
-      val same = members.select(col("gid"), col("id").as("id_a"))
-        .join(members.select(col("gid"), col("id").as("id_b")), Seq("gid"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(0L).as("dist"))
-      cross.union(same)
-    }
+    collapsedPairs(d, Seq("p", "blk"), collapse, lit(0L))(
+      blockedDpPairs(_, maxDist))
   }
 
   /** The blocked DP join proper, over (id, p, blk) rows: plain equi-
     * join below [[SaltPairsFloor]]; hot-block salted + pinned above it
     * (see [[editDistancePairs]]'s scaladoc). Candidate volume past
-    * [[Explosive.pinRows]] pins the plain join's exchanges too — the
+    * [[Explosive.pinGate]] pins the plain join's exchanges too — the
     * post-join DP is the cost, so AQE's byte-sized reducers starve it
     * exactly like the posting joins.
     */
@@ -983,11 +947,8 @@ object Dedup {
         .head()
       (r.getLong(0), math.min(r.getDouble(1), Long.MaxValue.toDouble).toLong)
     }
-    val maxBlock = AdaptiveStrategy.cachedLong("edblock-max", planHash) {
+    val maxBlock = AdaptiveStrategy.cached("edblock-max", planHash) {
       blockStats._1
-    }
-    val candVol = AdaptiveStrategy.cachedLong("edblock-cand", planHash) {
-      blockStats._2
     }
     val parts = d.sparkSession.sessionState.conf.numShufflePartitions
     // double compare: a corpus-sized block would overflow maxBlock² as
@@ -1020,17 +981,15 @@ object Dedup {
         .withColumn("salt",
           pmod(xxhash64(col("id_a")), coalesce(col("nsalt"), lit(1L))))
         .drop("nsalt")
-        .repartition(parts, col("blk"), col("salt"))
       val bS = b.join(hotSide, Seq("blk"), "left")
         .withColumn("salt",
           explode(sequence(lit(0L), coalesce(col("nsalt"), lit(1L)) - 1)))
         .drop("nsalt")
-        .repartition(parts, col("blk"), col("salt"))
-      verified(aS.join(bS, Seq("blk", "salt")))
+      verified(Explosive.blockerJoin(aS, bS, Seq("blk", "salt"), pin = true))
     } else {
-      val pin = candVol / 2 > Explosive.pinRows(d)
-      verified(Explosive.maybePin(a, pin, col("blk"))
-        .join(Explosive.maybePin(b, pin, col("blk")), Seq("blk")))
+      // the memoized statistic is the candidate-pair volume Σ n_b² / 2
+      val pin = Explosive.pinGate(d, "edblock-cand", planHash)(blockStats._2 / 2)
+      verified(Explosive.blockerJoin(a, b, Seq("blk"), pin))
     }
   }
 

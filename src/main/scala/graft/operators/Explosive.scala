@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
 
 /** Physical-parallelism guards for EXPLOSIVE operators — blocker joins
   * (LSH bands, shingle postings, grid cells) and heavy per-row map
@@ -26,12 +27,18 @@ import org.apache.spark.sql.{Column, DataFrame}
   * Both guards are deliberately GATED so they vanish exactly where
   * Spark's defaults are right:
   *
-  *  - [[maybePin]] pins an AQE-exempt numbered repartition on the
-  *    blocker keys only when the blocker relation is large enough that
-  *    reducer starvation dominates ([[PinRowsKey]], default 1 M rows).
-  *    Below the gate the join stays AQE-coalescible — or broadcastable,
-  *    which an unconditional pin would lard with two dead exchanges
-  *    (the round-10 sf0.1 scale regression).
+  *  - [[blockerJoin]] is the one blocker join: with `pin` it
+  *    repartitions both inputs to the session's shuffle-partition
+  *    count on the join keys (numbered repartitions are AQE-exempt,
+  *    and the join reuses them as its exchanges), otherwise it is a
+  *    plain equi-join. Gated callers take `pin` from [[pinGate]]: a
+  *    memoized blocker-relation statistic times a per-row factor,
+  *    compared with [[PinRowsKey]] (default 1 M rows) at call time.
+  *    Below the gate the join stays AQE-coalescible — or
+  *    broadcastable, which an unconditional pin would lard with two
+  *    dead exchanges (the round-10 sf0.1 scale regression). Joins
+  *    that are explosive by construction (the cosine tile join, the
+  *    salted edit-distance join, the q-gram posting join) always pin.
   *  - [[ensureMapParallelism]] hash-repartitions the input before the
   *    heavy map work only when the planned scan has fewer partitions
   *    than the session's shuffle parallelism — the local/small-file
@@ -46,19 +53,29 @@ private[graft] object Explosive {
   val PinRowsKey = "spark.graft.explosive.pinRows"
   val DefaultPinRows = 1000000L
 
-  def pinRows(df: DataFrame): Long =
-    df.sparkSession.conf.get(PinRowsKey, DefaultPinRows.toString).toLong
-
-  /** `df.repartition(n, keys)` with the session's EXPLICIT shuffle
-    * partition count (user-numbered repartitions are AQE-exempt, and
-    * the downstream equi-join on the same keys reuses the exchange)
-    * when `pin`; untouched otherwise.
+  /** True when the blocker relation — `perRow` probe rows for each
+    * unit of the statistic `stat` — exceeds [[PinRowsKey]]. The
+    * STATISTIC is memoized per (namespace, planHash), never the
+    * decision: the comparison with the session's pinRows runs at every
+    * call, so a changed conf takes effect on a cache-warm plan.
     */
-  def maybePin(df: DataFrame, pin: Boolean, keys: Column*): DataFrame =
+  def pinGate(df: DataFrame, namespace: String, planHash: Int,
+      perRow: Long = 1L)(stat: => Long): Boolean =
+    AdaptiveStrategy.cached(namespace, planHash)(stat) * perRow >
+      df.sparkSession.conf.get(PinRowsKey, DefaultPinRows.toString).toLong
+
+  /** `a ⋈ b` on `keys`; with `pin`, both inputs first repartition to
+    * the session's EXPLICIT shuffle-partition count on the keys
+    * (user-numbered repartitions are AQE-exempt, and the join reuses
+    * them as its exchanges).
+    */
+  def blockerJoin(a: DataFrame, b: DataFrame, keys: Seq[String],
+      pin: Boolean): DataFrame =
     if (pin) {
-      val n = df.sparkSession.sessionState.conf.numShufflePartitions
-      df.repartition(n, keys: _*)
-    } else df
+      val n = a.sparkSession.sessionState.conf.numShufflePartitions
+      val k = keys.map(col)
+      a.repartition(n, k: _*).join(b.repartition(n, k: _*), keys)
+    } else a.join(b, keys)
 
   /** Hash-repartition heavy per-row map work up to session parallelism
     * when the planned scan yields fewer partitions; no-op when the

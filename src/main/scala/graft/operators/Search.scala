@@ -16,29 +16,29 @@ object Search {
 
   /** Top-k documents for a bag-of-words query.
     *
-    * Scale shape: the token stream is filtered to the query terms
-    * BEFORE any shuffle (a narrow codegen'd isin over the exploded
-    * scan — postings for absent terms never leave the mappers), tf is
-    * a partial-aggregating groupBy, df is an aggregate over the
-    * already-tiny tf relation, the df lookup is an explicit broadcast
-    * join (query-term-count rows), and the final top-k is a
-    * TakeOrdered — no global sort. The only corpus-sized shuffle is
-    * the tf groupBy, keyed by (doc_id, term). N (a genuine score
-    * input) is a one-row aggregate attached by a broadcast cross join
-    * — the whole plan stays lazy, nothing is counted at construction
-    * time (the bigramNovelty pattern).
+    * Scale shape: per-document tf is row-local — `token_tf` scans each
+    * text once and emits its (tk, tf) entries ([[tfFrame]]'s form), so
+    * no (doc, term) aggregate shuffles the token stream; the entries
+    * are filtered to the query terms BEFORE any shuffle (a narrow
+    * codegen'd isin — postings for absent terms never leave the
+    * mappers), df is an aggregate over the already-tiny tf relation,
+    * the df lookup is an explicit broadcast join (query-term-count
+    * rows), and the final top-k is a TakeOrdered — no global sort. N
+    * (a genuine score input) is a one-row aggregate attached by a
+    * broadcast cross join — the whole plan stays lazy, nothing is
+    * counted at construction time (the bigramNovelty pattern). Query
+    * terms must be non-empty: `token_tf` drops empty tokens.
     *
     * Returns (doc_id, score, terms_matched) ordered by score desc.
     */
   def topK(docs: DataFrame, id: Column, text: Column,
       terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "query needs at least one term")
+    require(terms.forall(_.nonEmpty), "query terms must be non-empty")
     val nRel = docs.agg(count(lit(1)).as("n_total"))
-    val postings = docs
-      .select(id.as("doc_id"), explode(split(text, " ")).as("tk"))
+    val tf = docs
+      .select(id.as("doc_id"), inline(graft.plans.TokenTf.token_tf(text)))
       .filter(col("tk").isin(terms: _*))
-    val tf = postings.groupBy(col("doc_id"), col("tk"))
-      .agg(count(lit(1)).as("tf"))
     val dfRel = tf.groupBy(col("tk")).agg(count(lit(1)).as("df"))
     tf.join(broadcast(dfRel), Seq("tk"))
       .crossJoin(broadcast(nRel))
@@ -70,26 +70,23 @@ object Search {
     * is standard, with dl/avgdl computed as (dl·N)/Σdl — integer
     * numerator, one double division, no intermediate rounding drift.
     *
-    * Scale shape: identical to [[topK]] — scan-side term filter,
-    * combining tf groupBy as the only corpus-sized shuffle, broadcast
-    * df + one-row broadcast totals (N, Σdl), TakeOrdered final. dl
-    * rides the postings rows (a long per row), so no second join
-    * against a doc-length table.
+    * Scale shape: identical to [[topK]] — row-local tf, scan-side term
+    * filter, broadcast df + one-row broadcast totals (N, Σdl),
+    * TakeOrdered final. dl rides the tf rows (a long per row), so no
+    * second join against a doc-length table.
     */
   def bm25TopK(docs: DataFrame, id: Column, text: Column,
       terms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "query needs at least one term")
-    val base = docs.select(id.as("doc_id"),
-      size(split(text, " ")).cast("long").as("dl"),
-      split(text, " ").as("toks"))
-    val totals = base.agg(count(lit(1)).as("n_total"),
+    require(terms.forall(_.nonEmpty), "query terms must be non-empty")
+    val dl = size(split(text, " ")).cast("long").as("dl")
+    val totals = docs.select(dl).agg(count(lit(1)).as("n_total"),
       sum(col("dl")).as("tot_tokens"))
-    val tf = base
-      .select(col("doc_id"), col("dl"), explode(col("toks")).as("tk"))
+    val tf = docs
+      .select(id.as("doc_id"), dl,
+        inline(graft.plans.TokenTf.token_tf(text)))
       .filter(col("tk").isin(terms: _*))
-      .groupBy(col("doc_id"), col("dl"), col("tk"))
-      .agg(count(lit(1)).as("tf"))
     val dfRel = tf.groupBy(col("tk")).agg(count(lit(1)).as("df"))
     val idf = (col("n_total") - col("df") + lit(0.5)) /
       (col("df") + lit(0.5))
@@ -199,9 +196,8 @@ object Search {
     else {
       // posting self-join is explosive: pin its exchanges past the
       // blocker gate (total postings), same shape as q34's count join
-      val pin = AdaptiveStrategy.cachedLong("apss-postings", tfHash) {
-        gateStats._2
-      } > Explosive.pinRows(docs)
+      val pin =
+        Explosive.pinGate(docs, "apss-postings", tfHash)(gateStats._2)
       invertedPairs(weighted, threshold, dfCap, pin)
     }
   }
@@ -259,11 +255,9 @@ object Search {
     val pruned = weighted.filter(col("df") > 1 && col("w") > 0)
     val indexed = dfCap.fold(pruned)(cap =>
       pruned.filter(col("df") <= cap))
-    val cand = Explosive.maybePin(
-        indexed.select(col("doc_id").as("id_a"), col("tk")), pin, col("tk"))
-      .join(Explosive.maybePin(
-        indexed.select(col("doc_id").as("id_b"), col("tk")), pin, col("tk")),
-        Seq("tk"))
+    val cand = Explosive.blockerJoin(
+        indexed.select(col("doc_id").as("id_a"), col("tk")),
+        indexed.select(col("doc_id").as("id_b"), col("tk")), Seq("tk"), pin)
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .distinct()
@@ -311,15 +305,15 @@ object Search {
     */
   /** Cache key for the dense-path vocabulary memo: namespace carries
     * the cap PLUS a 64-bit MD5 prefix of the CANONICALIZED analyzed
-    * plan, alongside the 32-bit semantic hash. Unlike the boolean/long
-    * gate caches — where a collision merely picks the slower exact
-    * strategy — a refCache collision would serve the WRONG vocabulary,
-    * and terms absent from it are silently dropped by densePairs'
-    * inner join (round 16, advisor). Two independent digests of the
-    * same canonical form put an accidental collision past 90 bits;
-    * the staleness contract (in-place mutation under an identical
-    * plan) is unchanged and documented on [[AdaptiveStrategy
-    * .cachedRef]]. `private[graft]` so specs pin the exact key.
+    * plan, alongside the 32-bit semantic hash. Unlike the gate
+    * decisions and statistics — where a collision merely picks the
+    * slower exact strategy — a collision here would serve the WRONG
+    * vocabulary, and terms absent from it are silently dropped by
+    * densePairs' inner join (round 16, advisor). Two independent
+    * digests of the same canonical form put an accidental collision
+    * past 90 bits; the staleness contract (in-place mutation under an
+    * identical plan) is unchanged and documented on
+    * [[AdaptiveStrategy]]. `private[graft]` so specs pin the exact key.
     */
   private[graft] def vocabMemoKey(weighted: DataFrame,
       capPlusOne: Int): (String, Int) = {
@@ -362,7 +356,7 @@ object Search {
     // cap in the key: a smaller-cap call stores a TRUNCATED list (it
     // throws right after), which must never satisfy a larger-cap call
     val (memoNs, memoHash) = vocabMemoKey(weighted, capPlusOne)
-    val terms = AdaptiveStrategy.cachedRef(memoNs, memoHash) {
+    val terms = AdaptiveStrategy.cached(memoNs, memoHash) {
       weighted.select(col("tk")).distinct().limit(capPlusOne)
         .collect().map(_.getString(0)).sorted(utf8Order)
     }

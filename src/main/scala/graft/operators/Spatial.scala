@@ -78,29 +78,25 @@ object Spatial {
     // or AQE-coalesces fine — so pin only past the blocker gate
     // (probe rows = 9 × points). The input count is one cheap action
     // over the projected points, cached per logical plan.
-    val pin = AdaptiveStrategy.cachedLong("spatial-pts",
-        pts.queryExecution.analyzed.semanticHash()) {
-      pts.count()
-    } * 9 > Explosive.pinRows(df)
+    val pin = Explosive.pinGate(df, "spatial-pts",
+        pts.queryExecution.analyzed.semanticHash(), 9)(pts.count())
     def cellOf(c: Column) = (c - pmod(c, lit(r))) / r
     val cells = pts
       .withColumn("cx", cellOf(col("px")).cast("long"))
       .withColumn("cy", cellOf(col("py")).cast("long"))
     val offsets = array((for (dx <- -1 to 1; dy <- -1 to 1)
       yield struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))): _*)
-    val probes = Explosive.maybePin(cells.select(col("pid").as("id_a"),
+    val probes = cells.select(col("pid").as("id_a"),
         col("px").as("xa"), col("py").as("ya"),
         explode(offsets).as("o"),
         col("cx"), col("cy"))
       .select(col("id_a"), col("xa"), col("ya"),
         (col("cx") + col("o.dx")).as("cx"),
-        (col("cy") + col("o.dy")).as("cy")), pin, col("cx"), col("cy"))
-    val cand = probes.join(
-      Explosive.maybePin(
+        (col("cy") + col("o.dy")).as("cy"))
+    val cand = Explosive.blockerJoin(probes,
         cells.select(col("pid").as("id_b"), col("px").as("xb"),
           col("py").as("yb"), col("cx"), col("cy")),
-        pin, col("cx"), col("cy")),
-      Seq("cx", "cy"))
+        Seq("cx", "cy"), pin)
       .filter(col("id_a") < col("id_b"))
     cand.select(col("id_a"), col("id_b"),
         col("xa"), col("ya"), col("xb"), col("yb"),

@@ -65,9 +65,10 @@ object StringJoin {
     // 8.0e8 candidate pairs over 258 keys (which AQE then coalesced
     // to ~2 tasks: >25 min) to the distinct-string volume, with
     // survivors expanded through member joins and within-group pairs
-    // emitted at distance 0 directly. Gated on the observed duplicate
-    // fraction exactly like [[Dedup.ngramJaccardPairs]]: on a mostly-
-    // unique corpus the group-by + member joins are pure overhead.
+    // emitted at distance 0 directly ([[Dedup.collapsedPairs]]). Gated
+    // on the observed duplicate fraction ([[Dedup.duplicateHeavy]]): on
+    // a mostly-unique corpus the group-by + member joins are pure
+    // overhead.
     val planHash = s0.queryExecution.analyzed.semanticHash()
     lazy val stats: (Long, Long) = {
       val r = s0.agg(count(lit(1)).as("n"),
@@ -76,33 +77,12 @@ object StringJoin {
     }
     val collapse = collapseDups.getOrElse(
       AdaptiveStrategy.cached("edjoin-collapse", planHash) {
-        stats._2 * 5L <= stats._1 * 4L
+        Dedup.duplicateHeavy(stats._1, stats._2)
       })
-    if (!collapse) pairsAmongDistinct(s0, maxDist, q, prefixLen)
-    else {
-      val groups = Checkpoints.truncate(
-        s0.groupBy(col("s")).agg(min(col("id")).as("id")))
-      val members = Checkpoints.truncate(
-        s0.join(groups.select(col("s"), col("id").as("gid")), Seq("s"))
-          .select(col("id"), col("gid")))
-      val groupPairs =
-        pairsAmongDistinct(groups.select(col("id"), col("s")),
-          maxDist, q, prefixLen)
-      val cross = groupPairs
-        .join(members.select(col("gid").as("id_a"), col("id").as("ia")),
-          Seq("id_a"))
-        .join(members.select(col("gid").as("id_b"), col("id").as("ib")),
-          Seq("id_b"))
-        .select(least(col("ia"), col("ib")).as("id_a"),
-          greatest(col("ia"), col("ib")).as("id_b"), col("dist"))
-      // identical strings are distance 0 ≤ maxDist by definition: every
-      // within-group pair is emitted directly, no DP
-      val same = members.select(col("gid"), col("id").as("id_a"))
-        .join(members.select(col("gid"), col("id").as("id_b")), Seq("gid"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(0L).as("dist"))
-      cross.union(same)
-    }
+    // identical strings are distance 0 ≤ maxDist by definition: every
+    // within-group pair is emitted directly, no DP
+    Dedup.collapsedPairs(s0, Seq("s"), collapse, lit(0L))(
+      pairsAmongDistinct(_, maxDist, q, prefixLen))
   }
 
   private def pairsAmongDistinct(s: DataFrame, maxDist: Int, q: Int,
@@ -127,17 +107,16 @@ object StringJoin {
     // the posting self-join is explosive BY CONSTRUCTION (tiny shuffled
     // bytes — ≤ d·q+1 prefix rows per string — against quadratic
     // post-join candidate volume), so its exchanges are pinned
-    // unconditionally with user-numbered repartitions, the cosine-tile
-    // rule: AQE sizes reducers by shuffled bytes and coalesced the sf1
-    // candidate stream to ~2 tasks. The pinned exchange moves only the
-    // slim prefix postings, never the strings.
-    val parts = s.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = prefix.select(col("id").as("id_a"), col("len").as("len_a"),
-        col("gram"), col("occ"))
-      .repartition(parts, col("gram"), col("occ"))
-      .join(prefix.select(col("id").as("id_b"), col("len").as("len_b"),
-        col("gram"), col("occ"))
-        .repartition(parts, col("gram"), col("occ")), Seq("gram", "occ"))
+    // unconditionally, the cosine-tile rule: AQE sizes reducers by
+    // shuffled bytes and coalesced the sf1 candidate stream to ~2
+    // tasks. The pinned exchange moves only the slim prefix postings,
+    // never the strings.
+    val cand = Explosive.blockerJoin(
+        prefix.select(col("id").as("id_a"), col("len").as("len_a"),
+          col("gram"), col("occ")),
+        prefix.select(col("id").as("id_b"), col("len").as("len_b"),
+          col("gram"), col("occ")),
+        Seq("gram", "occ"), pin = true)
       .filter(col("id_a") < col("id_b") &&
         abs(col("len_a") - col("len_b")) <= maxDist)
       .select(col("id_a"), col("id_b")).distinct()

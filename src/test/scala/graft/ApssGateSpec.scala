@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{AdaptiveStrategy, Search}
 
 /** Pins the APSS adaptive gate's decisions and the dense-path
-  * vocabulary memo (round 16, verdict task 6).
+  * vocabulary memo (round 16, verdict task 6), and the contract of the
+  * one [[AdaptiveStrategy]] memo they share.
   *
   * Background: the graded `documents` corpora have tiny closed
   * vocabularies (31 tokens at sf0.1, 40 at sf1 — measured), so q95
@@ -45,14 +46,14 @@ class ApssGateSpec extends SparkSpec {
 
     // constructing with dense = None makes the gate decide eagerly
     Search.sparseCosinePairs(small, col("doc_id"), col("text"), 0.5)
-    assert(AdaptiveStrategy.peek("apss-dense", kSmall).contains(true),
+    assert(AdaptiveStrategy.peek[Boolean]("apss-dense", kSmall).contains(true),
       "a 3-token vocabulary must choose the dense path")
 
     Search.sparseCosinePairs(big, col("doc_id"), col("text"), 0.5)
-    assert(AdaptiveStrategy.peek("apss-dense", kBig).contains(false),
+    assert(AdaptiveStrategy.peek[Boolean]("apss-dense", kBig).contains(false),
       "a 5000-token vocabulary must choose the inverted path")
     // the small corpus's decision is untouched by the big one's
-    assert(AdaptiveStrategy.peek("apss-dense", kSmall).contains(true))
+    assert(AdaptiveStrategy.peek[Boolean]("apss-dense", kSmall).contains(true))
   }
 
   test("dense path memoizes the vocabulary index per input plan — " +
@@ -69,7 +70,7 @@ class ApssGateSpec extends SparkSpec {
     assert(memoNs.startsWith("apss-vocab-4097-") &&
       memoNs.length == "apss-vocab-4097-".length + 16,
       s"memo namespace must carry the 64-bit plan digest: $memoNs")
-    val memo = AdaptiveStrategy.peekRef[Array[String]](memoNs, wKey)
+    val memo = AdaptiveStrategy.peek[Array[String]](memoNs, wKey)
     assert(memo.isDefined,
       "first dense construction must populate the vocabulary memo " +
         "(re-constructions then skip the tokenize/tf collect — the " +
@@ -78,5 +79,37 @@ class ApssGateSpec extends SparkSpec {
     // the memoized vocabulary is sorted-distinct — a pure function of
     // the input, so serving it changes no result
     assert(memo.get.toSeq == memo.get.toSeq.distinct.sorted)
+  }
+
+  test("the adaptive memo: first stored value wins, peek never computes, " +
+      "namespaces do not alias, and a full map evicts exactly one entry") {
+    val h = 0x5eed
+    var runs = 0
+    assert(AdaptiveStrategy.peek[Long]("memo-spec-a", h).isEmpty)
+    assert(AdaptiveStrategy.cached("memo-spec-a", h) { runs += 1; 7L } === 7L)
+    assert(AdaptiveStrategy.cached("memo-spec-a", h) { runs += 1; 8L } === 7L)
+    assert(runs === 1, "a memoized key must not recompute")
+    // a racing caller that stores first wins over a compute in flight
+    assert(AdaptiveStrategy.cached("memo-spec-race", h) {
+      AdaptiveStrategy.cached("memo-spec-race", h)(1L)
+      2L
+    } === 1L)
+    // peek on an absent key computes and stores nothing
+    val before = AdaptiveStrategy.size
+    assert(AdaptiveStrategy.peek[Long]("memo-spec-b", h).isEmpty)
+    assert(AdaptiveStrategy.size === before)
+    // same plan hash, another namespace: a separate entry
+    assert(AdaptiveStrategy.cached("memo-spec-b", h)(true))
+    assert(AdaptiveStrategy.peek[Long]("memo-spec-a", h).contains(7L))
+    assert(AdaptiveStrategy.peek[Boolean]("memo-spec-b", h).contains(true))
+    // at the cap an insert evicts exactly one resident
+    var i = 0
+    while (AdaptiveStrategy.size < AdaptiveStrategy.MaxEntries) {
+      AdaptiveStrategy.cached("memo-spec-fill", i)(i.toLong)
+      i += 1
+    }
+    assert(AdaptiveStrategy.cached("memo-spec-new", h)("x") === "x")
+    assert(AdaptiveStrategy.size === AdaptiveStrategy.MaxEntries)
+    assert(AdaptiveStrategy.peek[String]("memo-spec-new", h).contains("x"))
   }
 }

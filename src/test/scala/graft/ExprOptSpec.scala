@@ -85,7 +85,7 @@ class ExprOptSpec extends SparkSpec {
 
   test("langId via token_set_hits equals the replaced HOF formulation") {
     import TextFunctions.{bind, tokens, LangStopwords}
-    // the exact tree TextFunctions.langId used before round 17
+    // the exact language-ID tree used before round 17
     def legacyLangId(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       bind(tokens(c), t => {
         val counts = LangStopwords.map { case (lang, words) =>
@@ -112,7 +112,8 @@ class ExprOptSpec extends SparkSpec {
     val legacy = texts.select(col("id"), legacyLangId(col("text")).as("l"))
       .orderBy("id").collect().map(_.getString(1)).toSeq
     val fused = texts.select(col("id"),
-        TextFunctions.langId(col("text")).as("l"))
+        TextFunctions.langIdFromHits(
+          TextFunctions.langIdHits(col("text"))).as("l"))
       .orderBy("id").collect().map(_.getString(1)).toSeq
     assert(fused === legacy)
   }
@@ -248,7 +249,8 @@ class ExprOptSpec extends SparkSpec {
     ).zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val fusedCol = texts.select(col("doc_id"),
-        TextFunctions.langId(col("text")).as("l"))
+        TextFunctions.langIdFromHits(
+          TextFunctions.langIdHits(col("text"))).as("l"))
       .orderBy("doc_id").collect().map(_.getString(1)).toSeq
     val split2 = texts.select(col("doc_id"),
         TextFunctions.langIdHits(col("text")).as("__hits"))

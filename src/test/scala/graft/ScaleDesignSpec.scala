@@ -263,6 +263,92 @@ class ScaleDesignSpec extends SparkSpec {
         unpinned.queryExecution.optimizedPlan.toString)
   }
 
+  test("every gated blocker join pins both inputs past the gate, neither " +
+      "below it, and returns the same rows either way") {
+    import graft.operators.{Dedup, Explosive, Search, Spatial}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val docs = Tables(spark, sfDir, "documents")
+    val emb = Tables(spark, sfDir, "embeddings")
+    val pts = Tables(spark, sfDir, "customer")
+      .select(col("c_custkey").as("uid"),
+        pmod(col("c_custkey") * 7919, lit(1000L)).as("x"),
+        pmod(col("c_custkey") * 104729, lit(1000L)).as("y"))
+    val n = spark.sessionState.conf.numShufflePartitions
+    // a join input is pinned when a numbered repartition sits under it
+    // with only projections and filters in between
+    @annotation.tailrec
+    def pinned(p: LogicalPlan): Boolean = p match {
+      case r: RepartitionByExpression => r.optNumPartitions.contains(n)
+      case Project(_, c) => pinned(c)
+      case Filter(_, c) => pinned(c)
+      case _ => false
+    }
+    // (left, right) pin flags of every join the build and collect
+    // executed — checkpointed segments included (simhash's band join
+    // runs inside one), captured from the plans of each action
+    def joinInputs(build: => DataFrame)
+        : (Seq[(Boolean, Boolean)], Seq[String]) = {
+      val plans =
+        new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          plans.add(f -> qe.optimizedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val rows = try {
+        val out = build.collect().map(_.toString).sorted.toSeq
+        // listener events arrive in order: the collect's is the last
+        val deadline = System.nanoTime() + 60000000000L
+        while (!plans.asScala.exists(_._1 == "collect")) {
+          assert(System.nanoTime() < deadline, "no listener event for collect")
+          Thread.sleep(10)
+        }
+        out
+      } finally spark.listenerManager.unregister(listener)
+      val joins = plans.asScala.toSeq.flatMap(_._2.collect {
+        case j: Join => (pinned(j.left), pinned(j.right))
+      })
+      (joins, rows)
+    }
+    val callers: Seq[(String, () => DataFrame)] = Seq(
+      "ngramJaccardPairs count join" -> (() => Dedup.ngramJaccardPairs(
+        docs, col("doc_id"), col("text"), 3, 0.5, prefixFilter = Some(false))),
+      "ngramJaccardPairs prefix join" -> (() => Dedup.ngramJaccardPairs(
+        docs, col("doc_id"), col("text"), 3, 0.5, prefixFilter = Some(true))),
+      "containmentPairs" -> (() => Dedup.containmentPairs(
+        docs, col("doc_id"), col("text"), 3, 600000L)),
+      "minhashLshPairs" -> (() => Dedup.minhashLshPairs(
+        docs, col("doc_id"), col("text"), 3, 0.8)),
+      "simhashPairs" -> (() => Dedup.simhashPairs(
+        docs, col("doc_id"), col("text"))),
+      "cosinePairsApprox" -> (() => Dedup.cosinePairsApprox(
+        emb, col("vec_id"), col("embedding"), 0.4, rowsPerBand = 4)),
+      "Dedup.editDistancePairs" -> (() => Dedup.editDistancePairs(
+        docs, col("doc_id"), col("text"), prefixLen = 80, maxDist = 20)),
+      "Spatial.radiusPairs" -> (() => Spatial.radiusPairs(
+        pts, col("uid"), col("x"), col("y"), 50L)),
+      "sparseCosinePairs inverted" -> (() => Search.sparseCosinePairs(
+        docs, col("doc_id"), col("text"), 0.6, dense = Some(false))))
+    callers.foreach { case (name, build) =>
+      spark.conf.set(Explosive.PinRowsKey, "0")
+      val (pinnedJoins, pinnedRows) =
+        try joinInputs(build()) finally spark.conf.unset(Explosive.PinRowsKey)
+      assert(pinnedJoins.contains((true, true)),
+        s"$name: past the gate both blocker-join inputs must carry " +
+          s"numbered repartitions: $pinnedJoins")
+      val (defaultJoins, defaultRows) = joinInputs(build())
+      assert(defaultJoins.nonEmpty && !defaultJoins.exists(j => j._1 || j._2),
+        s"$name: below the gate no join input may pin: $defaultJoins")
+      assert(pinnedRows.nonEmpty, s"$name: the fixture must produce pairs")
+      assert(pinnedRows === defaultRows, s"$name: rows differ with the pin")
+    }
+  }
+
   test("connected-components rounds plan no cartesian or BNLJ") {
     import graft.operators.Components
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")

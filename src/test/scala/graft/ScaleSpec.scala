@@ -42,7 +42,8 @@ class ScaleSpec extends SparkSpec {
   test("langId heuristic picks stopword-dominant language") {
     val out = Seq("der hund und die katze", "the cat is on the mat",
       "el gato y la casa", "xyzzy plugh").toDF("t")
-      .select(TextFunctions.langId(col("t")).as("l")).as[String].collect()
+      .select(TextFunctions.langIdFromHits(
+        TextFunctions.langIdHits(col("t"))).as("l")).as[String].collect()
     assert(out.toSeq === Seq("de", "en", "es", "unknown"))
   }
 
