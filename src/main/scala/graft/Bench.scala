@@ -140,7 +140,11 @@ object Bench {
         // started a section contended minutes after the startup gate
         // cleared), then the rows inside their own steal window
         val timed = sections.map { s =>
-          s.queries.foreach(runOnce)
+          // warm-up laps go to stderr, so a timed row can be read
+          // against its own lap
+          s.queries.foreach { d =>
+            System.err.println(f"[bench] warm-up ${d.name} ${runOnce(d)}%.3f s")
+          }
           val par = parRatioNow()
           val (rows, steal) = withSteal(s.queries.map(timeRow))
           Timed(s, par, rows, steal)

@@ -14,6 +14,16 @@ import org.apache.spark.sql.SparkSession
   * A session that is already running (a test suite's, a REPL's, an
   * embedding harness's) is returned as it is: the factory writes no
   * conf into it, and only the caller that created a session stops it.
+  *
+  * Settings that apply to the whole JVM come from its launch line
+  * (`build.sbt` `javaOptions`, mirrored by `tools/run_main.sh`): UTC,
+  * the UI off, and the codegen cache size
+  * (`spark.sql.codegen.cache.maxEntries=4000`). The cache size is not a
+  * session conf because Spark reads it once per JVM, at the first
+  * compile, into one cache every session shares. 4000 holds the
+  * 300-odd classes one pass of the 14 benched queries generates many
+  * times over; Spark's default of 100 made every pass recompile them
+  * all (measured in SCALING.md, "Codegen cache").
   */
 object Sessions {
 

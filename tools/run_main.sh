@@ -11,5 +11,6 @@ ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# JVM-wide Spark settings; build.sbt javaOptions mirrors this list.
 exec java $ADDOPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-8g} -cp "$CP" "$@"
+  -Dspark.sql.codegen.cache.maxEntries=4000 -Xmx${SPARK_DRIVER_MEM:-8g} -cp "$CP" "$@"
